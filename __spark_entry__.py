@@ -1197,12 +1197,6 @@ def _pack_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "n_tokens", "cum_before", "bin_id", "bin_offset")
 
 
-# The r7 fetch_path_diag probe is retired: DIAG_r7.json records all 24
-# Spark×DuckDB materialization pairings agreeing for the three fixed
-# rows + control, so the row would only burn a window slot.
-# diagnostics.run_fetch_path_diag stays importable for future incidents.
-
-
 def _lang_label_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-quality audit: confusion matrix between the corpus's lang
     LABELS and the marker-token language-ID prediction — the check a
@@ -2139,9 +2133,10 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r10: the banding S-curve planner for the row above's (b, r)
         # choice — pure math, no table read (ignores sf_dir)
         "lsh_tuning_curve": lambda spark, sf_dir: TD.lsh_tuning_curve(spark),
-        # A/B physical shape: explode/agg (cluster-shaped) variant
+        # alias of neardup_minhash_lsh (one implementation per
+        # semantics); the name and its oracle row stay registered
         "neardup_minhash_lsh_exploded": _q(
-            TD.minhash_lsh_pairs_exploded, 0.3, table="documents"
+            TD.minhash_lsh_pairs, 0.3, table="documents"
         ),
         "neardup_simhash": _q(TD.simhash_pairs, 3, table="documents"),
         # portable-hash twin (VERDICT r6 item 4): md5-derived token hashes

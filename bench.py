@@ -71,8 +71,8 @@ def main() -> None:
         "topk_orders_per_customer",
         "range_join_events_pairs",
         "neardup_minhash_lsh",
-        # A/B: same semantics, explode/agg physical shape (the
-        # cluster-shaped plan) — numbers decide which wins per scale
+        # alias of neardup_minhash_lsh (same implementation); kept so
+        # round-over-round comparisons keep the row, never a speedup claim
         "neardup_minhash_lsh_exploded",
         "neardup_simhash",
         # NOT benched: neardup_prefix_jaccard (exact AllPairs/PPJoin

@@ -16,15 +16,24 @@ import sys
 import time
 
 
+def _usage() -> None:
+    print("usage: qprobe.py [-n RUNS] query [query ...]", file=sys.stderr)
+    sys.exit(2)
+
+
 def main() -> None:
     args = sys.argv[1:]
     n_runs = 5
     if args and args[0] == "-n":
-        n_runs = int(args[1])
+        try:
+            n_runs = int(args[1])
+        except (IndexError, ValueError):
+            n_runs = 0
+        if n_runs < 1:
+            _usage()
         args = args[2:]
     if not args:
-        print("usage: qprobe.py [-n RUNS] query [query ...]", file=sys.stderr)
-        sys.exit(2)
+        _usage()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -2,8 +2,9 @@
 
 Two tiers:
 
-* Column expressions (``aggregate``/``zip_with``) — zero-dependency,
-  exactly sequential float64 (bit-matches a sequential SQL oracle).
+* Column expressions (``aggregate``/``transform``: ``norm``,
+  ``l2_normalize``) — zero-dependency, exactly sequential float64
+  (bit-matches a sequential SQL oracle).
   Higher-order functions are INTERPRETED per element in Spark, so
   this tier is for small/verification workloads only (~1 ms/row).
 * ``cosine_pandas`` — Arrow-batched pandas UDF over numpy float64:
@@ -26,14 +27,6 @@ def _c(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def norm(a: Column | str) -> Column:
     return F.sqrt(
         F.aggregate(
@@ -42,13 +35,6 @@ def norm(a: Column | str) -> Column:
             lambda acc, x: acc + x.cast("double") * x.cast("double"),
         )
     )
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; 0.0 when either vector has zero norm."""
-    d = dot(a, b)
-    na, nb = norm(a), norm(b)
-    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(d / (na * nb))
 
 
 def _cosine_pd_impl(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -80,21 +66,6 @@ def cosine_pandas(
     if single_eval:
         f = f.asNondeterministic()
     return f(_c(a), _c(b))
-
-
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                _c(a),
-                _c(b),
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
 
 
 def l2_normalize(a: Column | str) -> Column:

@@ -78,15 +78,6 @@ def explode_blocks(df: DataFrame, rules: list[BlockingRule]) -> DataFrame:
     )
 
 
-def lowest_common_block(bkvs1: Column, bkvs2: Column) -> Column:
-    """Smallest blocking-function number under which two records
-    co-block — the pair is compared only there (``Util.scala:70-83``,
-    ``Compare.scala:94,106``). Array form (higher-order functions are
-    interpreted per pair — use the unrolled scalar guard below in hot
-    paths)."""
-    return F.array_min(F.transform(F.array_intersect(bkvs1, bkvs2), lambda x: x["k"]))
-
-
 def bv_col(priority: int) -> str:
     """Name of the per-rule scalar block-value column."""
     return f"_bv{priority}"
@@ -106,11 +97,13 @@ _NO_COMMON = 1 << 30
 def lowest_common_block_scalar(
     rules: list[BlockingRule], t1: str = "t1_", t2: str = "t2_"
 ) -> Column:
-    """Unrolled lowest-common-block over the ``_bv<k>`` columns of both
-    sides: LEAST over rules of (k if values equal else sentinel).
-    Plain when/least — stays inside whole-stage codegen (the array
-    form costs ~0.1 ms/pair interpreted, which dominates pair
-    generation)."""
+    """Smallest blocking-function number under which two records
+    co-block — the pair is compared only there (``Util.scala:70-83``,
+    ``Compare.scala:94,106``). Unrolled over the ``_bv<k>`` columns of
+    both sides: LEAST over rules of (k if values equal else sentinel).
+    Plain when/least — stays inside whole-stage codegen (an
+    array_intersect/transform form costs ~0.1 ms/pair interpreted,
+    which dominates pair generation)."""
     terms = [
         F.when(
             F.col(f"{t1}{bv_col(r.priority)}") == F.col(f"{t2}{bv_col(r.priority)}"),

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from sparklyclean_spark.cache import tracked_persist
 from sparklyclean_spark.functions import text as T
@@ -96,29 +97,6 @@ def shingle_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
     )
-
-
-def shingle_hash_table(
-    docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, h): distinct 64-bit shingle hashes per document, built with
-    explode + window lead — every operator whole-stage-codegen, no
-    higher-order functions (HOFs are interpreted per row and their
-    shared eval paths degrade under JVM profile pollution; an
-    explode/agg pipeline is also the natural shape at 100 TB)."""
-    from pyspark.sql import Window
-
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(T.words(text_col)).alias("pos", "tok"),
-    )
-    w = Window.partitionBy("id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w).alias(f"t{j}") for j in range(1, n)]
-    shingled = toks.select("id", *parts).where(
-        F.lit(True) if n == 1 else F.col(f"t{n-1}").isNotNull()
-    )
-    shingle = F.concat_ws(" ", "tok", *[f"t{j}" for j in range(1, n)])
-    return shingled.select("id", F.xxhash64(shingle).alias("h")).distinct()
 
 
 def _splitmix64(x):
@@ -393,8 +371,7 @@ def minhash_lsh_pairs(
     and per-pair miss at j=0.8 is (1-0.8^4)^16 ≈ 2e-4 — tight enough
     that the output equals the exact quadratic result whenever true
     near-dups sit at j ≥ 0.8 (the oracle relies on this); precision
-    is exact-verified either way. For an all-builtin explode/agg
-    shape, see ``minhash_lsh_pairs_exploded``.
+    is exact-verified either way.
     """
     t = _sig_table(docs, n, num_hashes, id_col, text_col)
     banded = _band_table(t, bands, num_hashes // bands)
@@ -411,78 +388,6 @@ def minhash_lsh_pairs(
         cands.join(sets.select(F.col("id").alias("id1"), F.col("sh").alias("s1")), "id1")
         .join(sets.select(F.col("id").alias("id2"), F.col("sh").alias("s2")), "id2")
         .withColumn("jaccard", F.round(_jaccard(F.col("s1"), F.col("s2")), 4))
-        .where(F.col("jaccard") >= threshold)
-    )
-    return verified.select("id1", "id2", "jaccard")
-
-
-def minhash_lsh_pairs_exploded(
-    docs: DataFrame,
-    threshold: float,
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Explode/aggregate variant of ``minhash_lsh_pairs`` — identical
-    semantics, different physical shape: signatures via (id, seed) →
-    min(hash) aggregation, verification via intersection counting on
-    the shingle-hash table. No per-row array expressions, so per-row
-    CPU is lower and every operator is a vanilla shuffle/agg AQE can
-    rebalance — the preferred plan on a large cluster where stage
-    startup is amortized (it carries ~3× the stages, which loses on
-    latency-bound local runs).
-    """
-    rows_per_band = num_hashes // bands
-    # feeds signatures AND verification — materialize once
-    sh = tracked_persist(shingle_hash_table(docs, n, id_col, text_col))
-    sh.count()
-
-    # sig(id, seed) = min over shingles of xxhash64(h, seed)
-    seeded = sh.select(
-        "id", "h", F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1))).alias("seed")
-    )
-    sig = seeded.groupBy("id", "seed").agg(F.min(F.xxhash64("h", "seed")).alias("mh"))
-    # bucket per (id, band) = hash of the band's r min-values in seed order
-    band_vals = sig.groupBy("id", (F.col("seed") / rows_per_band).cast("int").alias("band")).agg(
-        *[
-            F.min(F.when(F.col("seed") % rows_per_band == r, F.col("mh"))).alias(f"m{r}")
-            for r in range(rows_per_band)
-        ]
-    )
-    banded = band_vals.select(
-        "id", "band", F.xxhash64(*[f"m{r}" for r in range(rows_per_band)]).alias("bucket")
-    )
-    a = banded.select("band", "bucket", F.col("id").alias("id1"))
-    b = banded.select("band", "bucket", F.col("id").alias("id2"))
-    cands = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-    cands = tracked_persist(cands)
-
-    # exact Jaccard via intersection counting on the shingle-hash table
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        cands.join(sh.select(F.col("id").alias("id1"), "h"), "id1")
-        .join(sh.select(F.col("id").alias("id2"), "h"), ["id2", "h"])
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    verified = (
-        cands.join(inter, ["id1", "id2"], "left")
-        .na.fill({"inter": 0})
-        .join(sizes.select(F.col("id").alias("id1"), F.col("sz").alias("sz1")), "id1")
-        .join(sizes.select(F.col("id").alias("id2"), F.col("sz").alias("sz2")), "id2")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sz1") + F.col("sz2") - F.col("inter")), 4
-            ),
-        )
         .where(F.col("jaccard") >= threshold)
     )
     return verified.select("id1", "id2", "jaccard")
@@ -712,8 +617,8 @@ def common_ngram_pairs(
     leads = [F.lead("tok", j).over(w).alias(f"t{j}") for j in range(1, n)]
     grams = (
         toks.select("id", "tok", *leads)
-        # n=1: no lead columns exist — the shingle_hash_table guard,
-        # omitted here until the r9 review (unresolved-column crash)
+        # n=1: no lead columns exist (unresolved-column crash without
+        # this guard)
         .where(F.lit(True) if n == 1 else F.col(f"t{n-1}").isNotNull())
         .select(
             "id",
@@ -1101,7 +1006,6 @@ def winnowing_overlap_pairs(
     max_fp_df: int = 50,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tier: str = "arrow",
 ) -> DataFrame:
     """Span-level copy detection BETWEEN documents: pairs sharing
     ≥ ``min_shared`` winnowed fingerprints (each shared fingerprint
@@ -1114,17 +1018,18 @@ def winnowing_overlap_pairs(
     BEFORE the self-join, so posting-list work stays linear. Output:
     (id1, id2, n_shared), exact integers.
 
-    ``tier`` (r12 optimization): the fingerprint table defaults to the
-    Arrow ``_winnow_fp_table_batch`` pass — BIT-EQUAL to the
-    declarative form by pytest gate (the fp A/B rows' contract), so
-    the oracle hash is unchanged, and it skips the per-character
-    explode + doc-keyed window exchange entirely (measured ~4x on the
-    fp build). Pass ``tier="column"`` for non-integral id columns
-    (the declarative tier is the generic one).
+    The fingerprint table comes from the Arrow
+    ``_winnow_fp_table_batch`` pass when the id column is integral —
+    BIT-EQUAL to the declarative form by pytest gate (the fp A/B rows'
+    contract), so the oracle hash is unchanged, and it skips the
+    per-character explode + doc-keyed window exchange entirely
+    (measured ~4x on the fp build). Any other id type takes the
+    declarative ``_winnow_fp_table`` (the generic tier).
     """
+    integral = isinstance(docs.schema[id_col].dataType, IntegralType)
+    tbl = _winnow_fp_table_batch if integral else _winnow_fp_table
     # the winnow pipeline feeds the df agg AND both join sides —
     # materialize once (the _sig_table precedent)
-    tbl = _winnow_fp_table_batch if tier == "arrow" else _winnow_fp_table
     fps = tracked_persist(
         tbl(docs, k, window, id_col, text_col).select("id", "h")
     )

@@ -68,14 +68,17 @@ def pagerank(
     the registered query; on dense hubs with tighter differential
     gates, size the gate to degree·iters·0.5e-12.
 
-    Input contract (not validated — both checks would cost a join):
-    every edge endpoint must appear in ``vertices`` (contributions to
-    unknown endpoints are dropped and the rank sum drifts below 1),
-    and with ``symmetric=True`` the pair list must contain each
-    undirected edge ONCE (a list carrying both (a,b) and (b,a) counts
-    the edge twice in the degrees). Near-dup pair generators in this
-    repo emit id1 < id2 exactly once over a known corpus, satisfying
-    both.
+    Input contract: every edge endpoint must appear in ``vertices``
+    (contributions to unknown endpoints are dropped and the rank sum
+    drifts below 1), and with ``symmetric=True`` the pair list must
+    contain each undirected edge ONCE (a list carrying both (a,b) and
+    (b,a) counts the edge twice in the degrees). Near-dup pair
+    generators in this repo emit id1 < id2 exactly once over a known
+    corpus, satisfying both. With ``symmetric=True`` the first rule
+    is checked from the two counts the fast path already takes: more
+    distinct endpoints than vertices raises ``ValueError``. Unknown
+    endpoints that do not outnumber the isolated vertices, and the
+    second rule, are not validated (a full check would cost a join).
 
     r12 fast path (``symmetric=True`` only): an undirected graph's
     dangling vertices are exactly its ISOLATED vertices (out-degree =
@@ -141,6 +144,11 @@ def pagerank(
         deg = tracked_persist(deg)
         n_active = deg.count()
         n_d = n - n_active
+        if n_d < 0:
+            raise ValueError(
+                f"at least {-n_d} edge endpoint(s) are not in vertices: "
+                f"{n_active} distinct endpoints vs {n} vertices"
+            )
         # enrich the static edge table with the DESTINATION's degree
         # once, so each iteration is ONE join + ONE aggregation that
         # emits the next (v, out_deg, rank) table directly — the old

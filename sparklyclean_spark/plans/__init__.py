@@ -7,6 +7,7 @@ from sparklyclean_spark.plans.audit import (
     has_broadcast_hash_join,
     has_nested_loop_join,
     has_pushed_filters,
+    python_eval_count,
     read_schema_columns,
     whole_stage_codegen_spans,
 )
@@ -18,6 +19,7 @@ __all__ = [
     "has_broadcast_hash_join",
     "has_nested_loop_join",
     "has_pushed_filters",
+    "python_eval_count",
     "read_schema_columns",
     "whole_stage_codegen_spans",
 ]

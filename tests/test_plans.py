@@ -155,3 +155,21 @@ def test_quantize_stays_jvm_side(t):
     plan = P.explain_formatted(df)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert P.count_exchanges(df) == 0
+
+
+def test_single_eval_sites_run_each_udf_once(t):
+    """One ArrowEvalPython node per UDF call site: the cosine filter
+    must not be pushed below its projection and re-evaluate the UDF
+    (the duplication the ``single_eval`` marks prevent)."""
+    from pyspark.sql import functions as F
+
+    from sparklyclean_spark.operators.dedup import textdedup as TD
+    from sparklyclean_spark.operators.similarity.knn import ivf_topk, lsh_cosine_pairs
+
+    e = t["embeddings"]
+    assert P.python_eval_count(TD.embedding_cosine_pairs(e, 0.3)) == 1
+    # the signature UDF runs once, inside the persisted signature table
+    assert P.python_eval_count(lsh_cosine_pairs(e, 0.3)) == 1
+    # cell assignment once per side (corpus, queries) + the cosine re-rank
+    q = e.where(F.col("vec_id") < 20)
+    assert P.python_eval_count(ivf_topk(e, q, k=5, n_cells=8, nprobe=2)) == 3

@@ -638,6 +638,19 @@ def test_pagerank_matches_power_iteration(spark):
     assert max(got, key=got.get) == 0
 
 
+def test_pagerank_rejects_edge_to_absent_vertex(spark):
+    """An edge naming a vertex outside ``vertices`` makes the dangling
+    count negative; PageRank must raise instead of drifting."""
+    import pytest
+
+    from sparklyclean_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame([(0, 1), (1, 2)], "id1 bigint, id2 bigint")
+    verts = spark.createDataFrame([(0,), (1,)], "id bigint")
+    with pytest.raises(ValueError, match="at least 1 edge endpoint"):
+        pagerank(edges, verts)
+
+
 def test_weighted_sample_exact_k_model(spark):
     """A-ES exact-k sampler vs a sequential Python replay of the same
     md5-uniform + key arithmetic; exact quota per stratum."""
@@ -773,3 +786,30 @@ def test_winnowing_arrow_tier_bit_equal(spark):
 
     with pytest.raises(ValueError):
         winnowing_fingerprints(docs, tier="nope")
+
+
+def test_winnowing_overlap_pairs_string_ids(spark):
+    """String ids take the declarative fingerprint tier (the Arrow one
+    declares ``id bigint``) and must yield the same pairs as the same
+    corpus under integer ids."""
+    from sparklyclean_spark.operators.dedup.textdedup import (
+        winnowing_overlap_pairs,
+    )
+
+    shared = "a long literal passage copied verbatim between two documents "
+    texts = [
+        shared * 2 + "with its own ending",
+        "another opening line, then " + shared * 2,
+        "an unrelated document about something else entirely",
+    ]
+    ints = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    strs = spark.createDataFrame(
+        [("abc"[i], t) for i, t in enumerate(texts)], "doc_id string, text string"
+    )
+    by_int = {
+        ("abc"[r.id1], "abc"[r.id2], r.n_shared)
+        for r in winnowing_overlap_pairs(ints).collect()
+    }
+    by_str = {tuple(r) for r in winnowing_overlap_pairs(strs).collect()}
+    assert by_int and {(a, b) for a, b, _ in by_int} == {("a", "b")}
+    assert by_str == by_int
