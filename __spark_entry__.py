@@ -7640,7 +7640,7 @@ def _rpq_common_sql(dim: int = 64, sub: int = 16, rotated: bool = False) -> str:
     the shared `pq.ropq_train`) and the unit-vector CTE ``uv``
     becomes normalize → rotate by the baked R columns → ROUND(.., 9)
     (the Spark encoder's np.round(unit(x) @ R, 9), no re-normalize —
-    see `_residual_encode_udf`). Every downstream CTE (sims, resid,
+    see `pq._rotate`). Every downstream CTE (sims, resid,
     the adist chain's qresid) reads ``uv``, so the two flavors share
     one scoring chain and cannot drift."""
     if rotated:

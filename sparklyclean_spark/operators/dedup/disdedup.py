@@ -214,33 +214,6 @@ def candidate_pairs_disdedup(
         F.sum(F.expr("n * (n - 1) div 2")).alias("w"), F.count(F.lit(1)).alias("blocks")
     ).collect()[0]
     total_w = int(totals["w"] or 0)
-    if total_w == 0:
-        # Schema-faithful empty result: column types derived from the
-        # input (id/payload keep their real types, cell-stats columns
-        # match the full plan), so duplicate-free inputs still satisfy
-        # the documented output contract and union cleanly.
-        z = df.limit(0)
-        t1 = z.select(
-            F.lit(1).cast("int").alias("bk"),
-            F.col(id_col).alias("id1"),
-            *[F.col(c).alias(f"t1_{c}") for c in payload_cols],
-        )
-        t2 = z.select(
-            F.col(id_col).alias("id2"),
-            *[F.col(c).alias(f"t2_{c}") for c in payload_cols],
-        )
-        empty = t1.crossJoin(t2)
-        if with_cell_stats:
-            empty = (
-                empty.withColumn("rid", F.lit(None).cast("int"))
-                .withColumn("cell", F.lit(None).cast("int"))
-                .withColumn("bv", F.lit(None).cast("string"))
-            )
-        out = ["bk", "id1", "id2"]
-        out += [f"t1_{c}" for c in payload_cols] + [f"t2_{c}" for c in payload_cols]
-        if with_cell_stats:
-            out += ["rid", "cell", "bv"]
-        return empty.select(*out)
     w_per_reducer = total_w / k
     tau = total_w / (3.0 * k * math.log(k)) if k >= 3 else w_per_reducer
     heavy = [

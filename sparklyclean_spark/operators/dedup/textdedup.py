@@ -41,13 +41,17 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 
 
 def _jaccard(a, b) -> F.Column:
-    # |a ∪ b| = |a| + |b| − |a ∩ b| for the distinct-element arrays every
-    # caller passes (np.unique'd shingle-hash sets / array_distinct token
-    # sets), so ONE interpreted set build per pair instead of two —
-    # array_intersect/array_union are non-codegen hash-set scans and were
-    # the dominant per-pair cost of the exact verification paths (r12,
-    # guide §1.2 per-task work). Same integers → same doubles → same
-    # quotient: bit-identical, every consuming oracle hash unchanged.
+    """Jaccard of two array columns. PRECONDITION: both arrays hold
+    DISTINCT elements (np.unique'd shingle-hash sets, array_distinct
+    token sets); on arrays with repeats the union below is undercounted
+    and the result is wrong, not an error.
+
+    |a ∪ b| = |a| + |b| − |a ∩ b| for distinct-element arrays, so ONE
+    interpreted set build per pair instead of two — array_intersect /
+    array_union are non-codegen hash-set scans and were the dominant
+    per-pair cost of the exact verification paths (r12, guide §1.2
+    per-task work). Same integers → same doubles → same quotient:
+    bit-identical, every consuming oracle hash unchanged."""
     inter = F.size(F.array_intersect(a, b))
     union = (F.size(a) + F.size(b) - inter).cast("double")
     return F.when(union == 0.0, F.lit(0.0)).otherwise(
@@ -251,7 +255,12 @@ def incremental_lsh_pairs(
     text, so shard-vs-corpus candidates are IDENTICAL to what a full
     ``minhash_lsh_pairs`` over corpus+shard would emit for cross
     pairs (pytest-gated equality). Within-shard duplicates are out of
-    scope: run the regular path on the shard itself."""
+    scope: run the regular path on the shard itself.
+
+    ``index_bands`` and ``index_sets`` must be the two tables
+    ``minhash_index`` returned for the corpus (same n, num_hashes,
+    bands): the verify's ``_jaccard`` relies on its distinct
+    shingle-hash sets."""
     t_new = _sig_table(new_docs, n, num_hashes, id_col, text_col)
     banded_new = _band_table(t_new, bands, num_hashes // bands)
     cands = (

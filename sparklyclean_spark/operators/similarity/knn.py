@@ -331,6 +331,25 @@ def lsh_cosine_pairs(
     return verified.select("id1", "id2", F.round("cos", 4).alias("cos"))
 
 
+def _unit(x):
+    """Row-wise L2 normalization of a (rows x dim) float64 matrix; norms
+    are clipped at 1e-12, so zero rows stay zero instead of NaN."""
+    import numpy as np
+
+    return x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
+
+
+def _top_cells(x, cents, top: int):
+    """(rows x top) cell ids of each row's ``top`` most similar
+    centroids, by descending ``x @ cents.T``. kind='stable': an exact
+    float tie must break toward the LOWEST cell id, exactly like the
+    oracle's ORDER BY sim DESC, cell ASC (default quicksort is not
+    stable — r9 advisor finding)."""
+    import numpy as np
+
+    return np.argsort(-(x @ cents.T), axis=1, kind="stable")[:, :top]
+
+
 def _spherical_kmeans(x, n_cells: int, iters: int = 10, seed: int = 647):
     """Driver-side spherical k-means (Lloyd on the unit sphere) over a
     bounded sample — the coarse quantizer of an IVF index. Seeded init,
@@ -342,7 +361,7 @@ def _spherical_kmeans(x, n_cells: int, iters: int = 10, seed: int = 647):
         # empty corpus/sample must fail loudly, not as an opaque
         # rng.choice IndexError three frames down
         raise ValueError("empty training sample: IVF centroids need >= 1 vector")
-    x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
+    x = _unit(x)
     rng = np.random.RandomState(seed)
     n_cells = min(n_cells, len(x))
     cents = x[rng.choice(len(x), size=n_cells, replace=False)].copy()
@@ -413,17 +432,10 @@ def cell_assign_udf(cents, top: int, single_eval: bool = False):
     from pyspark.sql.functions import pandas_udf
 
     def impl(vs):
-        m = np.asarray(vs.tolist(), dtype=np.float64)
-        m = m / np.clip(np.linalg.norm(m, axis=1, keepdims=True), 1e-12, None)
-        sims = m @ cents.T
+        m = _unit(np.asarray(vs.tolist(), dtype=np.float64))
         if top == 1:
-            return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
-        # kind='stable': an exact float tie in query-to-centroid sims
-        # must break toward the LOWEST cell id, exactly like the
-        # oracle's ORDER BY sim DESC, cell ASC (default quicksort is
-        # not stable — r9 advisor finding)
-        idx = np.argsort(-sims, axis=1, kind="stable")[:, :top].astype(np.int32)
-        return pd.Series(list(idx))
+            return pd.Series(np.argmax(m @ cents.T, axis=1).astype(np.int32))
+        return pd.Series(list(_top_cells(m, cents, top).astype(np.int32)))
 
     # ``single_eval=True`` marks the UDF nondeterministic (guide
     # §4.4): consumers that JOIN on the assigned cell get the join's
@@ -589,24 +601,11 @@ def ivf_cell_balance(
     Scale: one bounded driver-side training sample, one Arrow matmul
     assignment pass, one hash agg onto n_cells rows.
     """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
     from sparklyclean_spark.functions.rounding import ratio4
 
     c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    rows = _hash_ordered_sample(c, "id", sample_cap)
-    x = np.array([r["v"] for r in rows], dtype=np.float64)
-    cents = _spherical_kmeans(x, n_cells, iters, seed)
-
-    def impl(vs):
-        m = np.asarray(vs.tolist(), dtype=np.float64)
-        m = m / np.clip(np.linalg.norm(m, axis=1, keepdims=True), 1e-12, None)
-        return pd.Series(np.argmax(m @ cents.T, axis=1).astype(np.int32))
-
-    assigned = c.withColumn("cell", pandas_udf(impl, "int")(F.col("v")))
+    cents = train_ivf_centroids(c, n_cells, 1, sample_cap, iters, seed, "id", "v")
+    assigned = c.withColumn("cell", cell_assign_udf(cents, 1)(F.col("v")))
     # r12 (guide §5): the total is a 1-row agg OVER the per-cell
     # counts; without the persist the broadcast-subquery side re-ran
     # the whole assignment pass (two ArrowEvalPython scans of the

@@ -34,7 +34,41 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparklyclean_spark.operators.similarity.knn import _hash_ordered_sample
+from sparklyclean_spark.operators.similarity.knn import (
+    _hash_ordered_sample,
+    _top_cells,
+    _unit,
+)
+
+
+def _sqdist(x, cents):
+    """Squared L2 of every (..., sub) row of ``x`` to every codeword of
+    ``cents`` (the trailing (ks, sub) axes), snapped to the 1e-9 grid
+    the oracle's ROUND(.., 9) uses."""
+    import numpy as np
+
+    return np.round(((x[..., None, :] - cents) ** 2).sum(-1), 9)
+
+
+def _nearest(block, codebook):
+    """(codes, dmin) of each row of a (rows x sub) block against one
+    (ks x sub) codebook: the snapped-distance argmin (ties -> lowest
+    code, numpy argmin semantics == the oracle's ORDER BY dist ASC,
+    code ASC) and that snapped minimum."""
+    d = _sqdist(block, codebook)
+    return d.argmin(axis=1), d.min(axis=1)
+
+
+def _rotate(x, R):
+    """The OPQ frame: ``x @ R`` SNAPPED to the 1e-9 grid (both engines
+    then encode from identical inputs, shrinking the 1-ulp
+    matmul-vs-list_sum divergence surface to snap boundaries); the
+    identity when ``R`` is None. The result is NOT re-normalized (its
+    norm is 1 up to snap error; a re-normalize would add an unsnapped
+    cross-engine float divide between two snapped stages)."""
+    import numpy as np
+
+    return x if R is None else np.round(x @ R, 9)
 
 
 def _l2_kmeans(x, ks: int, iters: int = 10, seed: int = 647):
@@ -48,8 +82,7 @@ def _l2_kmeans(x, ks: int, iters: int = 10, seed: int = 647):
     ks = min(ks, len(x))
     cents = x[rng.choice(len(x), size=ks, replace=False)].copy()
     for _ in range(iters):
-        d = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        assign = np.round(d, 9).argmin(axis=1)
+        assign, _ = _nearest(x, cents)
         for c in range(ks):
             pts = x[assign == c]
             if len(pts):
@@ -77,7 +110,7 @@ def codebooks_from_vectors(
         raise ValueError("empty training sample: PQ codebooks need >= 1 vector")
     x = np.array(vecs, dtype=np.float64)
     if normalize:
-        x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
+        x = _unit(x)
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -123,33 +156,44 @@ def train_pq_codebooks(
     return codebooks_from_vectors([r["v"] for r in rows], m, ks, iters, seed)
 
 
-def _encode_udf(cents, single_eval: bool = True):
-    """Arrow-batched encoder: embedding -> struct(codes array<int>,
-    mdist array<double>). codes[j] = argmin_c round(||v_j - C_jc||^2, 9)
-    (ties -> lowest code, numpy argmin semantics == the oracle's
-    ORDER BY dist ASC, code ASC); mdist[j] is that snapped minimum
-    (feeds pq_distortion). One (rows x sub x ks) broadcasted-diff
-    batch per subspace — no per-row Python."""
+def _encode_udf(pq_cents, R=None, ivf_cents=None, origins=None, single_eval=True):
+    """The ONE Arrow-batched PQ encoder of every tier: embedding ->
+    struct([cell int,] codes array<int>, mdist array<double>). Per
+    batch: L2-normalize; rotate into the OPQ frame and snap when ``R``
+    is given (`_rotate`); when ``ivf_cents`` is given, assign the IVF
+    argmax cell (ties -> lowest cell, the oracle's ORDER BY sim DESC,
+    cell ASC) and subtract that cell's residual origin (``origins``,
+    the cell MEAN from `cell_means_from_sample`), emitting ``cell``;
+    then codes[j] / mdist[j] are `_nearest` of the j-th sub-vector
+    against codebook j (mdist feeds the distortion cards). One
+    (rows x ks x sub) broadcasted-diff batch per subspace — no per-row
+    Python. ``R``/``ivf_cents``/``origins`` are the tier's trained
+    arrays, shipped in the UDF closure."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql.functions import pandas_udf
 
-    m, ks, sub = cents.shape
+    m, ks, sub = pq_cents.shape
 
     def impl(vs):
-        x = np.asarray(vs.tolist(), dtype=np.float64)
-        x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
+        x = _rotate(_unit(np.asarray(vs.tolist(), dtype=np.float64)), R)
+        out = {}
+        if ivf_cents is not None:
+            cells = np.argmax(x @ ivf_cents.T, axis=1)
+            x = x - origins[cells]
+            out["cell"] = cells.astype(np.int32)
         codes = np.empty((len(x), m), dtype=np.int32)
         mdist = np.empty((len(x), m), dtype=np.float64)
         for j in range(m):
             block = x[:, j * sub : (j + 1) * sub]
-            d = ((block[:, None, :] - cents[j][None, :, :]) ** 2).sum(-1)
-            d = np.round(d, 9)
-            codes[:, j] = d.argmin(axis=1)
-            mdist[:, j] = d.min(axis=1)
-        return pd.DataFrame({"codes": list(codes), "mdist": list(mdist)})
+            codes[:, j], mdist[:, j] = _nearest(block, pq_cents[j])
+        out.update(codes=list(codes), mdist=list(mdist))
+        return pd.DataFrame(out)
 
+    schema = "codes: array<int>, mdist: array<double>"
+    if ivf_cents is not None:
+        schema = "cell: int, " + schema
     # ``single_eval=True`` (default) marks the UDF nondeterministic
     # (optimization guide §4.4): every funnel consumer posexplodes the
     # codes/mdist array, and the optimizer's inferred size(..)>0
@@ -162,49 +206,123 @@ def _encode_udf(cents, single_eval: bool = True):
     # defeat CacheManager sameResult matching, so consumers of the
     # cached relation would silently recompute the encode instead of
     # reading the cache.
-    f = pandas_udf(impl, "struct<codes: array<int>, mdist: array<double>>")
+    f = pandas_udf(impl, f"struct<{schema}>")
     return f.asNondeterministic() if single_eval else f
 
 
-def _unit_rows(q_rows, vec_field: str = "qv"):
-    """L2-normalized (n x dim) float64 matrix from collected rows."""
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str, query_cap: int):
+    """The bounded query set every ADC funnel builds its driver-side
+    tables from: (query ids int64, L2-normalized (n x dim) float64
+    matrix), id-ordered. More than ``query_cap`` queries raise instead
+    of being silently truncated (one extra row is fetched to tell)."""
     import numpy as np
 
-    qx = np.array([r[vec_field] for r in q_rows], dtype=np.float64)
-    return qx / np.clip(np.linalg.norm(qx, axis=1, keepdims=True), 1e-12, None)
+    rows = (
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+        .orderBy("query_id")
+        .limit(query_cap + 1)
+        .collect()
+    )
+    if len(rows) > query_cap:
+        raise ValueError(
+            f"more than query_cap={query_cap} queries: raise query_cap or "
+            "split the query set"
+        )
+    qids = np.array([int(r["query_id"]) for r in rows], dtype=np.int64)
+    return qids, _unit(np.array([r["qv"] for r in rows], dtype=np.float64))
 
 
-def _query_lut(spark, q_rows, qx, cents, id_field: str = "query_id"):
-    """The shared ADC lookup-table build (pq_topk AND ivf_pq_topk, so
-    the snap grid / schema / decimal cast can never desynchronize the
-    two tiers from their common oracle): (query_id, j, code, d) with d
-    the 1e-9-snapped partial squared L2 of the normalized query
-    sub-vector to each codeword, cast DECIMAL(18,9) for exact sums."""
+def _probes(spark, qids, qx, ivf_cents, nprobe: int):
+    """Each query's ``nprobe`` probed cells (`knn._top_cells`, the
+    oracle's sim DESC, cell ASC order). Returns (query row index per
+    probe, cell per probe, broadcastable (query_id, cell) DataFrame)."""
+    import numpy as np
+    import pandas as pd
+
+    top = min(nprobe, len(ivf_cents))
+    cells = _top_cells(qx, ivf_cents, top).ravel()
+    qi = np.repeat(np.arange(len(qids)), top)
+    pdf = pd.DataFrame({"query_id": qids[qi], "cell": cells.astype(np.int32)})
+    return qi, cells, spark.createDataFrame(pdf, "query_id bigint, cell int")
+
+
+def _adc_lut(spark, ids, rows, cents, cells=None):
+    """The ONE ADC lookup-table build (every PQ tier, so the snap grid
+    / schema / decimal cast can never desynchronize the tiers from
+    their common oracle): (query_id, [cell,] j, code, d) with d the
+    `_sqdist` partial squared L2 of each row's j-th sub-vector to each
+    codeword, cast DECIMAL(18,9) for exact sums. ``rows`` are the
+    (n x dim) prepared query vectors, one per ``ids`` entry; the
+    residual tier passes one row per (query, probed cell) with that
+    ``cells`` entry. One batched numpy pass + an Arrow-path pandas
+    createDataFrame; the trailing-axis sum reduces each (sub,) slice
+    with the same kernel as a per-(q, j) loop, so the baked-literal
+    oracle contract holds."""
     import numpy as np
     import pandas as pd
 
     m, ks, sub = cents.shape
-    # r12: one batched numpy pass + an Arrow-path pandas createDataFrame
-    # instead of |q|·m·ks Python tuple constructions (the loop built
-    # 50k+ tuples per funnel construction and shipped them row-pickled).
-    # The trailing-axis sum reduces each (sub,) slice with the same
-    # kernel as the per-(q, j) form — verified np.array_equal, so the
-    # baked-literal oracle contract is untouched.
-    qids = np.array([int(r[id_field]) for r in q_rows], dtype=np.int64)
-    nq = len(qids)
-    blocks = qx.reshape(nq, m, sub)
-    d = np.round(((blocks[:, :, None, :] - cents[None, :, :, :]) ** 2).sum(-1), 9)
-    pdf = pd.DataFrame(
-        {
-            "query_id": np.repeat(qids, m * ks),
-            "j": np.tile(np.repeat(np.arange(m, dtype=np.int32), ks), nq),
-            "code": np.tile(np.arange(ks, dtype=np.int32), nq * m),
-            "d": d.ravel(),
-        }
+    n = len(ids)
+    d = _sqdist(rows.reshape(n, m, sub), cents)
+    cols = {"query_id": np.repeat(ids, m * ks)}
+    if cells is not None:
+        cols["cell"] = np.repeat(cells, m * ks).astype(np.int32)
+    cols["j"] = np.tile(np.repeat(np.arange(m, dtype=np.int32), ks), n)
+    cols["code"] = np.tile(np.arange(ks, dtype=np.int32), n * m)
+    cols["d"] = d.ravel()
+    keys = list(cols)[:-1]  # query_id [, cell], j, code
+    schema = "query_id bigint, " + "".join(f"{c} int, " for c in keys[1:]) + "d double"
+    return spark.createDataFrame(pd.DataFrame(cols), schema).select(
+        *keys, F.col("d").cast("decimal(18,9)").alias("d")
     )
-    return spark.createDataFrame(
-        pdf, "query_id bigint, j int, code int, d double"
-    ).select("query_id", "j", "code", F.col("d").cast("decimal(18,9)").alias("d"))
+
+
+def _adc_topk(joined: DataFrame, k: int) -> DataFrame:
+    """Shared tail of every ADC funnel: drop self-pairs, sum each
+    (query, neighbor)'s m table lookups (DECIMAL-exact), take the
+    per-query k smallest via the salted two-round window. Returns
+    (query_id, neighbor_id, adist, rank), adist ascending."""
+    from sparklyclean_spark.operators.skew import salted_topk
+
+    scored = (
+        joined.where(F.col("query_id") != F.col("neighbor_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum("d").alias("adist_dec"))
+    )
+    topk = salted_topk(
+        scored, ["query_id"], [F.asc("adist_dec"), F.asc("neighbor_id")], k
+    )
+    return topk.select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("adist_dec").cast("double"), 4).alias("adist"),
+        F.col("rn").cast("int").alias("rank"),
+    )
+
+
+def _distortion_card(enc: DataFrame) -> DataFrame:
+    """Shared per-subspace quantization card over an encoder's
+    ``mdist`` column: (j, n_vecs, mse). The per-vector minima are the
+    encoder's snapped (1e-9 grid) distances, summed as DECIMAL(18,9)
+    (exact, order-free) and floor-divided at the end — hash-stable
+    across engines and partitionings."""
+    per = enc.select(F.posexplode("mdist").alias("j", "d")).select(
+        "j", F.col("d").cast("decimal(18,9)").alias("d")
+    )
+    return (
+        per.groupBy("j")
+        .agg(F.count(F.lit(1)).alias("n_vecs"), F.sum("d").alias("s"))
+        .select(
+            "j",
+            F.col("n_vecs").cast("bigint").alias("n_vecs"),
+            (
+                F.floor(F.col("s").cast("double") * 1000000.0 / F.col("n_vecs") + 0.5)
+                / 1000000.0
+            ).alias("mse"),
+        )
+        # no trailing orderBy: m rows, and the driver's value hash is
+        # order-insensitive — a rangepartitioning exchange buys nothing
+    )
 
 
 def pq_topk(
@@ -242,14 +360,8 @@ def pq_topk(
         corpus, m, ks, sample_cap, iters, seed, id_col, vec_col
     )
 
-    q_rows = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-        .orderBy("query_id")
-        .limit(query_cap)
-        .collect()
-    )
-    spark = corpus.sparkSession
-    lut_df = _query_lut(spark, q_rows, _unit_rows(q_rows), cents)
+    qids, qx = _collect_queries(queries, id_col, vec_col, query_cap)
+    lut_df = _adc_lut(corpus.sparkSession, qids, qx, cents)
 
     enc = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -258,23 +370,7 @@ def pq_topk(
     exploded = enc.select(
         "neighbor_id", F.posexplode("codes").alias("j", "code")
     )
-    scored = (
-        exploded.join(F.broadcast(lut_df), ["j", "code"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("adist_dec"))
-    )
-    from sparklyclean_spark.operators.skew import salted_topk
-
-    topk = salted_topk(
-        scored, ["query_id"], [F.asc("adist_dec"), F.asc("neighbor_id")], k
-    )
-    return topk.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("adist_dec").cast("double"), 4).alias("adist"),
-        F.col("rn").cast("int").alias("rank"),
-    )
+    return _adc_topk(exploded.join(F.broadcast(lut_df), ["j", "code"]), k)
 
 
 def pq_distortion(
@@ -290,35 +386,13 @@ def pq_distortion(
     """Per-subspace quantization quality card: mean squared error
     between each (normalized) sub-vector and its assigned codeword —
     the number that decides whether ks/m are adequate before anyone
-    trusts the recall. Returns (j, n_vecs, mse).
-
-    The per-vector minima are the encoder's snapped (1e-9 grid)
-    distances, summed as DECIMAL(18,9) (exact, order-free) and
-    floor-divided at the end — hash-stable across engines and
-    partitionings.
+    trusts the recall. Returns (j, n_vecs, mse) (`_distortion_card`).
     """
     cents = train_pq_codebooks(
         corpus, m, ks, sample_cap, iters, seed, id_col, vec_col
     )
-    enc = corpus.select(
-        _encode_udf(cents)(F.col(vec_col))["mdist"].alias("mdist")
-    )
-    per = enc.select(F.posexplode("mdist").alias("j", "d")).select(
-        "j", F.col("d").cast("decimal(18,9)").alias("d")
-    )
-    return (
-        per.groupBy("j")
-        .agg(F.count(F.lit(1)).alias("n_vecs"), F.sum("d").alias("s"))
-        .select(
-            "j",
-            F.col("n_vecs").cast("bigint").alias("n_vecs"),
-            (
-                F.floor(F.col("s").cast("double") * 1000000.0 / F.col("n_vecs") + 0.5)
-                / 1000000.0
-            ).alias("mse"),
-        )
-        # no trailing orderBy: m rows, and the driver's value hash is
-        # order-insensitive — a rangepartitioning exchange buys nothing
+    return _distortion_card(
+        corpus.select(_encode_udf(cents)(F.col(vec_col))["mdist"].alias("mdist"))
     )
 
 
@@ -363,7 +437,6 @@ def ivf_pq_topk(
     )
 
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     # ONE hash-ordered sample collect feeds BOTH trainers (the same
     # rows train_ivf_centroids and train_pq_codebooks would each fetch
     # — identical md5(id) order and cap — without scanning twice)
@@ -383,44 +456,15 @@ def ivf_pq_topk(
     ).select("neighbor_id", "cell", F.posexplode("codes").alias("j", "code"))
 
     # query side: bounded collect builds probes + the ADC lookup table
-    q_rows = q.orderBy("query_id").limit(query_cap).collect()
-    qx = _unit_rows(q_rows)
-    sims = qx @ ivf_cents.T
-    top = min(nprobe, len(ivf_cents))
-    # kind='stable': exact sim ties break toward the lowest cell id,
-    # matching the oracle's ORDER BY sim DESC, cell ASC (row-wise
-    # argsort == the per-row form; pandas feed takes the Arrow path)
-    import pandas as pd
-
-    qids = np.array([int(r["query_id"]) for r in q_rows], dtype=np.int64)
-    probe_cells = np.argsort(-sims, axis=1, kind="stable")[:, :top]
-    probes_pdf = pd.DataFrame(
-        {
-            "query_id": np.repeat(qids, top),
-            "cell": probe_cells.ravel().astype(np.int32),
-        }
-    )
+    qids, qx = _collect_queries(queries, id_col, vec_col, query_cap)
     spark = corpus.sparkSession
-    probes = spark.createDataFrame(probes_pdf, "query_id bigint, cell int")
-    lut_df = _query_lut(spark, q_rows, qx, pq_cents)
-
-    scored = (
-        cc.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(lut_df), ["query_id", "j", "code"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("adist_dec"))
-    )
-    from sparklyclean_spark.operators.skew import salted_topk
-
-    topk = salted_topk(
-        scored, ["query_id"], [F.asc("adist_dec"), F.asc("neighbor_id")], k
-    )
-    return topk.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("adist_dec").cast("double"), 4).alias("adist"),
-        F.col("rn").cast("int").alias("rank"),
+    _, _, probes = _probes(spark, qids, qx, ivf_cents, nprobe)
+    lut_df = _adc_lut(spark, qids, qx, pq_cents)
+    return _adc_topk(
+        cc.join(F.broadcast(probes), "cell").join(
+            F.broadcast(lut_df), ["query_id", "j", "code"]
+        ),
+        k,
     )
 
 
@@ -439,8 +483,7 @@ def cell_means_from_sample(svecs, ivf_cents):
     DuckDB oracle renderer — bit-equal literals by construction."""
     import numpy as np
 
-    x = np.array(svecs, dtype=np.float64)
-    x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
+    x = _unit(np.array(svecs, dtype=np.float64))
     cells = np.argmax(x @ ivf_cents.T, axis=1)
     means = ivf_cents.copy()
     for c in range(len(ivf_cents)):
@@ -464,8 +507,7 @@ def residuals_from_vectors(vecs, ivf_cents, sub_points=None):
 
     if sub_points is None:
         sub_points = ivf_cents
-    x = np.array(vecs, dtype=np.float64)
-    x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
+    x = _unit(np.array(vecs, dtype=np.float64))
     cells = np.argmax(x @ ivf_cents.T, axis=1)
     return x - sub_points[cells], cells
 
@@ -512,64 +554,11 @@ def ropq_train(
     import numpy as np
 
     R, _ = opq_train(svecs, m, ks, iters, opq_iters, seed)
-    x = np.array(svecs, dtype=np.float64)
-    x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
-    xr = np.round(x @ R, 9)
+    xr = _rotate(_unit(np.array(svecs, dtype=np.float64)), R)
     ivf_cents, means, pq_cents = residual_train(
         list(xr), n_cells, m, ks, iters, seed
     )
     return R, ivf_cents, means, pq_cents
-
-
-def _residual_encode_udf(ivf_cents, sub_points, pq_cents, R=None):
-    """Arrow-batched residual encoder: embedding -> struct(cell int,
-    codes array<int>, mdist array<double>). The cell is the IVF argmax
-    assignment; codes[j] is the snapped-argmin codeword of the
-    RESIDUAL's j-th sub-vector (unit vector minus the cell's MEAN
-    origin, see `cell_means_from_sample`) against the residual-trained
-    codebook (ties -> lowest code); mdist[j] is that snapped minimum
-    (feeds rpq_distortion). Same 1e-9 snap grid as `_encode_udf` so
-    the oracle's ROUND(.., 9) argmin agrees.
-
-    ``R`` (r12, the OPQ∘IVF-PQ composition): when given, the unit
-    vector is rotated and SNAPPED to the 1e-9 grid before the cell
-    argmax and residual — `_opq_encode_udf`'s prep feeding the
-    residual machinery. The rotated vector is NOT re-normalized (its
-    norm is 1 up to snap error; a re-normalize would add an unsnapped
-    cross-engine float divide between two snapped stages), and the
-    downstream trainer/oracle operate on the same snapped frame."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    m, ks, sub = pq_cents.shape
-
-    def impl(vs):
-        x = np.asarray(vs.tolist(), dtype=np.float64)
-        x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
-        if R is not None:
-            x = np.round(x @ R, 9)
-        cells = np.argmax(x @ ivf_cents.T, axis=1)
-        r = x - sub_points[cells]
-        codes = np.empty((len(x), m), dtype=np.int32)
-        mdist = np.empty((len(x), m), dtype=np.float64)
-        for j in range(m):
-            block = r[:, j * sub : (j + 1) * sub]
-            d = ((block[:, None, :] - pq_cents[j][None, :, :]) ** 2).sum(-1)
-            d = np.round(d, 9)
-            codes[:, j] = d.argmin(axis=1)
-            mdist[:, j] = d.min(axis=1)
-        return pd.DataFrame(
-            {"cell": cells.astype(np.int32), "codes": list(codes),
-             "mdist": list(mdist)}
-        )
-
-    # same §4.4 nondeterministic mark as _encode_udf: stops the
-    # inferred-filter pushdown from duplicating the encode pass
-    return pandas_udf(
-        impl, "struct<cell: int, codes: array<int>, mdist: array<double>>"
-    ).asNondeterministic()
 
 
 def ivf_pq_residual_topk(
@@ -624,10 +613,7 @@ def ivf_pq_residual_topk(
     vectors still never shuffle; the only extra cost is one dim×dim
     matmul inside the existing Arrow pass.
     """
-    import numpy as np
-
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     # ONE hash-ordered sample collect feeds both trainers (the
     # ivf_pq_topk recipe) via the ONE shared residual_train sequence
     srows = _hash_ordered_sample(c, "neighbor_id", sample_cap)
@@ -645,7 +631,7 @@ def ivf_pq_residual_topk(
     # corpus side: one Arrow pass -> (neighbor_id, cell, j, code)
     cc = c.select(
         "neighbor_id",
-        _residual_encode_udf(ivf_cents, means, pq_cents, R)(F.col("cv")).alias("e"),
+        _encode_udf(pq_cents, R, ivf_cents, means)(F.col("cv")).alias("e"),
     ).select(
         "neighbor_id",
         F.col("e.cell").alias("cell"),
@@ -653,74 +639,18 @@ def ivf_pq_residual_topk(
     )
 
     # query side: bounded collect -> probe sets + the per-(query, cell)
-    # residual ADC lookup table
-    q_rows = q.orderBy("query_id").limit(query_cap).collect()
-    qx = _unit_rows(q_rows)
-    if R is not None:
-        # the encoder's prep, verbatim: rotate the unit query into the
-        # learned frame and snap; no re-normalize (see the encode UDF)
-        qx = np.round(qx @ R, 9)
-    sims = qx @ ivf_cents.T
-    top = min(nprobe, len(ivf_cents))
-    sub = pq_cents.shape[2]
-    # r12: batched numpy + Arrow-path pandas createDataFrame instead of
-    # |q|·nprobe·m·ks Python tuple constructions (50k+ per funnel
-    # construction, row-pickled to the JVM). kind='stable' row-wise
-    # argsort keeps the oracle's sim DESC, cell ASC tie order; the
-    # trailing-axis sum reduces each (sub,) slice with the same kernel
-    # as the per-(q, cell, j) loop (verified np.array_equal), so every
-    # baked literal and hash is unchanged.
-    import pandas as pd
-
-    qids = np.array([int(r["query_id"]) for r in q_rows], dtype=np.int64)
-    nq = len(qids)
-    probe_cells = np.argsort(-sims, axis=1, kind="stable")[:, :top]
-    qi_idx = np.repeat(np.arange(nq), top)
-    cells = probe_cells.ravel()
-    n_probes = len(cells)
-    probes_pdf = pd.DataFrame(
-        {"query_id": qids[qi_idx], "cell": cells.astype(np.int32)}
-    )
-    rq = qx[qi_idx] - means[cells]
-    blocks = rq.reshape(n_probes, m, sub)
-    d = np.round(
-        ((blocks[:, :, None, :] - pq_cents[None, :, :, :]) ** 2).sum(-1), 9
-    )
-    lut_pdf = pd.DataFrame(
-        {
-            "query_id": np.repeat(qids[qi_idx], m * ks),
-            "cell": np.repeat(cells, m * ks).astype(np.int32),
-            "j": np.tile(np.repeat(np.arange(m, dtype=np.int32), ks), n_probes),
-            "code": np.tile(np.arange(ks, dtype=np.int32), n_probes * m),
-            "d": d.ravel(),
-        }
-    )
+    # residual ADC lookup table; the query takes the encoder's prep
+    # verbatim (unit, then rotate + snap in the OPQ frame)
+    qids, qx = _collect_queries(queries, id_col, vec_col, query_cap)
+    qx = _rotate(qx, R)
     spark = corpus.sparkSession
-    probes = spark.createDataFrame(probes_pdf, "query_id bigint, cell int")
-    lut_df = spark.createDataFrame(
-        lut_pdf, "query_id bigint, cell int, j int, code int, d double"
-    ).select(
-        "query_id", "cell", "j", "code",
-        F.col("d").cast("decimal(18,9)").alias("d"),
-    )
-
-    scored = (
-        cc.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(lut_df), ["query_id", "cell", "j", "code"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("adist_dec"))
-    )
-    from sparklyclean_spark.operators.skew import salted_topk
-
-    topk = salted_topk(
-        scored, ["query_id"], [F.asc("adist_dec"), F.asc("neighbor_id")], k
-    )
-    return topk.select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.col("adist_dec").cast("double"), 4).alias("adist"),
-        F.col("rn").cast("int").alias("rank"),
+    qi, cells, probes = _probes(spark, qids, qx, ivf_cents, nprobe)
+    lut_df = _adc_lut(spark, qids[qi], qx[qi] - means[cells], pq_cents, cells)
+    return _adc_topk(
+        cc.join(F.broadcast(probes), "cell").join(
+            F.broadcast(lut_df), ["query_id", "cell", "j", "code"]
+        ),
+        k,
     )
 
 
@@ -752,8 +682,7 @@ def opq_train(
 
     if not len(svecs):
         raise ValueError("empty training sample: OPQ needs >= 1 vector")
-    x = np.array(svecs, dtype=np.float64)
-    x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
+    x = _unit(np.array(svecs, dtype=np.float64))
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -765,9 +694,7 @@ def opq_train(
     def _recon_block(xr, recon, j):
         # independent subspaces, disjoint output column blocks — safe
         # to thread, bit-identical to the sequential loop
-        block = xr[:, j * sub : (j + 1) * sub]
-        d = ((block[:, None, :] - cents[j][None, :, :]) ** 2).sum(-1)
-        codes = np.round(d, 9).argmin(axis=1)
+        codes, _ = _nearest(xr[:, j * sub : (j + 1) * sub], cents[j])
         recon[:, j * sub : (j + 1) * sub] = cents[j][codes]
 
     for _ in range(opq_iters):
@@ -781,39 +708,6 @@ def opq_train(
             x @ R, m, ks, iters, seed, normalize=False
         )
     return R, cents
-
-
-def _opq_encode_udf(R, cents):
-    """Arrow-batched OPQ encoder: normalize → rotate by R → SNAP the
-    rotated coordinates to the 1e-9 grid (both engines then encode
-    from identical inputs, shrinking the 1-ulp matmul-vs-list_sum
-    divergence surface to snap boundaries) → per-subspace snapped
-    argmin, exactly `_encode_udf`'s contract."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    m, ks, sub = cents.shape
-
-    def impl(vs):
-        x = np.asarray(vs.tolist(), dtype=np.float64)
-        x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
-        xr = np.round(x @ R, 9)
-        codes = np.empty((len(x), m), dtype=np.int32)
-        mdist = np.empty((len(x), m), dtype=np.float64)
-        for j in range(m):
-            block = xr[:, j * sub : (j + 1) * sub]
-            d = ((block[:, None, :] - cents[j][None, :, :]) ** 2).sum(-1)
-            d = np.round(d, 9)
-            codes[:, j] = d.argmin(axis=1)
-            mdist[:, j] = d.min(axis=1)
-        return pd.DataFrame({"codes": list(codes), "mdist": list(mdist)})
-
-    # same §4.4 nondeterministic mark as _encode_udf
-    return pandas_udf(
-        impl, "struct<codes: array<int>, mdist: array<double>>"
-    ).asNondeterministic()
 
 
 def opq_distortion(
@@ -837,21 +731,8 @@ def opq_distortion(
     c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     srows = _hash_ordered_sample(c, "id", sample_cap)
     R, cents = opq_train([r["v"] for r in srows], m, ks, iters, opq_iters, seed)
-    enc = c.select(_opq_encode_udf(R, cents)(F.col("v"))["mdist"].alias("mdist"))
-    per = enc.select(F.posexplode("mdist").alias("j", "d")).select(
-        "j", F.col("d").cast("decimal(18,9)").alias("d")
-    )
-    return (
-        per.groupBy("j")
-        .agg(F.count(F.lit(1)).alias("n_vecs"), F.sum("d").alias("s"))
-        .select(
-            "j",
-            F.col("n_vecs").cast("bigint").alias("n_vecs"),
-            (
-                F.floor(F.col("s").cast("double") * 1000000.0 / F.col("n_vecs") + 0.5)
-                / 1000000.0
-            ).alias("mse"),
-        )
+    return _distortion_card(
+        c.select(_encode_udf(cents, R)(F.col("v"))["mdist"].alias("mdist"))
     )
 
 
@@ -963,24 +844,5 @@ def ivf_pq_residual_distortion(
     ivf_cents, means, pq_cents = residual_train(
         svecs, n_cells, m, ks, iters, seed
     )
-
-    enc = c.select(
-        _residual_encode_udf(ivf_cents, means, pq_cents)(F.col("v"))[
-            "mdist"
-        ].alias("mdist")
-    )
-    per = enc.select(F.posexplode("mdist").alias("j", "d")).select(
-        "j", F.col("d").cast("decimal(18,9)").alias("d")
-    )
-    return (
-        per.groupBy("j")
-        .agg(F.count(F.lit(1)).alias("n_vecs"), F.sum("d").alias("s"))
-        .select(
-            "j",
-            F.col("n_vecs").cast("bigint").alias("n_vecs"),
-            (
-                F.floor(F.col("s").cast("double") * 1000000.0 / F.col("n_vecs") + 0.5)
-                / 1000000.0
-            ).alias("mse"),
-        )
-    )
+    encode = _encode_udf(pq_cents, ivf_cents=ivf_cents, origins=means)
+    return _distortion_card(c.select(encode(F.col("v"))["mdist"].alias("mdist")))

@@ -21,6 +21,8 @@ from sparklyclean_spark.functions.vectors import cosine_pandas
 from sparklyclean_spark.operators.similarity.knn import (
     _hash_ordered_sample,
     _spherical_kmeans,
+    cell_assign_udf,
+    train_ivf_centroids,
 )
 
 
@@ -66,14 +68,8 @@ def semdedup_dispositions(
     AQE-splittable). No broadcast of anything O(N); the disposition
     join back is an equi-join on id reusing the cell shuffle's data.
     """
-    import numpy as np
-
-    from sparklyclean_spark.operators.similarity.knn import cell_assign_udf
-
     c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    rows = _hash_ordered_sample(c, "id", sample_cap)
-    x = np.array([r["v"] for r in rows], dtype=np.float64)
-    cents = _spherical_kmeans(x, n_cells, iters, seed)
+    cents = train_ivf_centroids(c, n_cells, 1, sample_cap, iters, seed, "id", "v")
 
     # assignment feeds both join sides AND the disposition join back —
     # persist so the matmul pass runs once (the _sig_table precedent).
@@ -197,7 +193,6 @@ def semdedup_dispositions_pq(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    from sparklyclean_spark.operators.similarity.knn import cell_assign_udf
     from sparklyclean_spark.operators.similarity.pq import (
         _encode_udf,
         codebooks_from_vectors,

@@ -191,6 +191,28 @@ def test_plan_assignment_deterministic():
     assert p1.reducers_used_by_multi() <= 49
 
 
+def test_disdedup_no_pairs_matches_naive_schema(spark):
+    """A table whose blocks are all singletons (and an empty table)
+    has zero workload: the general plan must return 0 rows with the
+    naive path's column types, and the cell-stats columns typed too."""
+    rows = [(i, str(100 + i), f"s{i}", f"n{i}") for i in range(6)]
+    df = spark.createDataFrame(
+        rows, "rec_id bigint, blocking_number string, state string, name string"
+    )
+    for t in (df, df.limit(0)):
+        naive = candidate_pairs_naive(t, RULES, "rec_id", ["name"])
+        tri = candidate_pairs_disdedup(t, RULES, "rec_id", ["name"], k=7)
+        assert tri.count() == 0
+        assert tri.dtypes == naive.dtypes
+        stats = candidate_pairs_disdedup(
+            t, RULES, "rec_id", ["name"], k=7, with_cell_stats=True
+        )
+        assert stats.count() == 0
+        assert stats.dtypes == naive.dtypes + [
+            ("rid", "int"), ("cell", "int"), ("bv", "string")
+        ]
+
+
 def test_jaro_winkler_reference_values(spark):
     """Classic published JW values + edge conventions (empty -> 0.0,
     identical -> 1.0, sub-threshold pairs get NO prefix boost)."""

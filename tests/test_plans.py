@@ -173,3 +173,17 @@ def test_single_eval_sites_run_each_udf_once(t):
     # cell assignment once per side (corpus, queries) + the cosine re-rank
     q = e.where(F.col("vec_id") < 20)
     assert P.python_eval_count(ivf_topk(e, q, k=5, n_cells=8, nprobe=2)) == 3
+
+    # PQ encode sites: the encoder (with the IVF cell assignment in the
+    # same Arrow pass) runs once; the refine tier adds its cosine re-rank
+    from sparklyclean_spark.operators.similarity import pq
+
+    ivf = dict(k=5, n_cells=8, nprobe=2)
+    assert P.python_eval_count(pq.pq_topk(e, q, k=5)) == 1
+    assert P.python_eval_count(pq.ivf_pq_topk(e, q, **ivf)) == 1
+    for opq in (False, True):
+        df = pq.ivf_pq_residual_topk(e, q, opq=opq, **ivf)
+        assert P.python_eval_count(df) == 1, opq
+    assert P.python_eval_count(pq.ivf_pq_refine_topk(e, q, **ivf)) == 2
+    for card in (pq.pq_distortion, pq.opq_distortion, pq.ivf_pq_residual_distortion):
+        assert P.python_eval_count(card(e)) == 1, card.__name__

@@ -4,6 +4,8 @@ perplexity buckets."""
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_semdedup_keep_lowest_id_rule(spark):
     """Hand case for the disposition contract: each above-threshold
@@ -226,6 +228,31 @@ def test_pq_topk_duplicate_ranks_first_and_is_deterministic(spark):
         key=lambda t: t[3],
     )
     assert got == out2
+
+
+@pytest.mark.parametrize(
+    "funnel",
+    ["pq_topk", "ivf_pq_topk", "ivf_pq_residual_topk", "ivf_pq_refine_topk"],
+)
+def test_pq_funnels_reject_queries_beyond_cap(spark, funnel):
+    """More queries than ``query_cap`` must raise, naming the cap —
+    not silently answer only the first ``query_cap`` ids. Exactly
+    ``query_cap`` queries are all answered."""
+    import random
+
+    from sparklyclean_spark.operators.similarity import pq
+
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(24)]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    fn = getattr(pq, funnel)
+    kw = dict(k=2, m=2, ks=4)
+    if funnel != "pq_topk":
+        kw.update(n_cells=2, nprobe=2)
+    with pytest.raises(ValueError, match="query_cap=2"):
+        fn(emb, emb.where("vec_id < 3"), query_cap=2, **kw)
+    out = fn(emb, emb.where("vec_id < 2"), query_cap=2, **kw).collect()
+    assert sorted({r.query_id for r in out}) == [0, 1]
 
 
 def test_pq_distortion_shape_and_dup_corpus_zero(spark):
