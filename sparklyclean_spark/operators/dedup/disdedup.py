@@ -19,10 +19,12 @@ Spark-first:
   cell. Anchors are ``xxhash64`` of the record id — deterministic and
   uniform, fixing the reference's shared-RNG closure bug (SURVEY.md
   §2.9 G6).
-* Pair formation is two plain equi-joins on (bk, bv, cell) — L×R for
-  off-diagonal cells, S self-join for diagonal cells — so the whole
-  hot path is JVM-side sort-merge/hash join under whole-stage
-  codegen; no Python per pair. The reference instead hand-rolls the
+* Pair formation is one plain equi-join of the fan-out with itself on
+  (bk, bv, cell): left side without role R, right side without role
+  L, so off-diagonal cells pair L×R and diagonal cells pair S×S (a
+  residual id order keeps each S pair once). The whole hot path is
+  a JVM-side sort-merge/hash join under whole-stage codegen; no
+  Python per pair. The reference instead hand-rolls the
   shuffle + a streaming reducer (``DisDedupReducer.scala:13-67``);
   Catalyst's exchange + join is the idiomatic equivalent.
 * Exactly-once across overlapping blockings: lowest-common-block
@@ -40,14 +42,14 @@ import math
 import random
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparklyclean_spark.cache import tracked_persist
 from sparklyclean_spark.operators.dedup.blocking import (
     BlockingRule,
+    blocked_rows,
     bv_col,
-    explode_blocks,
     lowest_common_block_scalar,
 )
 
@@ -81,6 +83,15 @@ class DisDedupPlan:
         return sum(l * (l + 1) // 2 for l, _ in self.multi.values())
 
 
+def heavy_threshold(total_workload: int, k: int) -> float:
+    """The random-assignment threshold ``tau = W/(3k ln k)``: blocks
+    with more pairwise workload are heavy and planned on the driver.
+    For k < 3 (ln k too small to bound anything) it is W/k."""
+    if k >= 3:
+        return total_workload / (3.0 * k * math.log(k))
+    return total_workload / k if k else float("inf")
+
+
 def plan_assignment(
     heavy: list[tuple[int, str, int]],
     total_workload: int,
@@ -96,8 +107,7 @@ def plan_assignment(
     sorted-block order so the plan is reproducible (fixes G5).
     """
     w_per_reducer = total_workload / k if k else float("inf")
-    tau = total_workload / (3.0 * k * math.log(k)) if k >= 3 else w_per_reducer
-    plan = DisDedupPlan(k, total_workload, w_per_reducer, tau)
+    plan = DisDedupPlan(k, total_workload, w_per_reducer, heavy_threshold(total_workload, k))
     if not heavy:
         return plan
 
@@ -178,7 +188,7 @@ def candidate_pairs_disdedup(
     Same output schema as ``candidate_pairs_naive``: ``(bk, id1, id2,
     t1_<payload>..., t2_<payload>...)`` with ``id1 < id2`` (canonical
     order; comparators are symmetric so side swap is lossless).
-    ``with_cell_stats`` appends (rid, cell) for balance tests.
+    ``with_cell_stats`` appends (rid, cell, bv) for balance tests.
     """
     spark = df.sparkSession
     payload_cols = payload_cols or []
@@ -186,36 +196,15 @@ def candidate_pairs_disdedup(
         k = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
     bv_cols = [bv_col(r.priority) for r in rules]
-    # base feeds the stats job AND the fan-out; the fan-out feeds three
-    # role filters (L/R/S) — persist both so the scan+explode chain is
-    # materialized once, like the reference's single shuffle does.
-    base = explode_blocks(df, rules).select(
-        F.col(id_col).alias("id_"), *payload_cols, *bv_cols, "bk", "bv"
-    )
-    # The cell equi-joins inherit the persisted fan-out's partitioning
-    # whenever AQE broadcasts one side, and a small table arriving as
-    # one input split would then serialize ALL pair emission into one
-    # task — exactly the dangerous regime, since a small table can
-    # still carry quadratic pair work (Febrl: 20k rows in one split ->
-    # 50.6M pairs). The probe must read the REAL split count, which
-    # only the RDD lineage exposes; the .rdd conversion costs one
-    # plan translation, no job, and the guard is a no-op on any scan
-    # already >= k splits — an unconditional repartition(k) would
-    # instead collapse a 100 TB scan's parallelism to k and shuffle
-    # the whole table (r7 VERDICT finding 3, resolved as: the probe
-    # is deliberate).
-    if base.rdd.getNumPartitions() < k:
-        base = base.repartition(k)
-    base = tracked_persist(base)
+    # base feeds the stats job AND the fan-out: persist it so the
+    # scan+explode chain runs once. The split guard keeps the cell join
+    # parallel when AQE broadcasts one side of it.
+    base = tracked_persist(blocked_rows(df, rules, id_col, payload_cols, k))
 
     # --- stats job: block sizes; only heavy blocks reach the driver.
     stats = base.groupBy("bk", "bv").agg(F.count(F.lit(1)).alias("n")).where("n >= 2")
-    totals = stats.select(
-        F.sum(F.expr("n * (n - 1) div 2")).alias("w"), F.count(F.lit(1)).alias("blocks")
-    ).collect()[0]
-    total_w = int(totals["w"] or 0)
-    w_per_reducer = total_w / k
-    tau = total_w / (3.0 * k * math.log(k)) if k >= 3 else w_per_reducer
+    total_w = int(stats.select(F.sum(F.expr("n * (n - 1) div 2"))).collect()[0][0] or 0)
+    tau = heavy_threshold(total_w, k)
     heavy = [
         (r["bk"], r["bv"], r["n"])
         for r in stats.where(F.expr(f"n * (n - 1) div 2 > {tau}")).collect()
@@ -227,85 +216,47 @@ def candidate_pairs_disdedup(
     rows = [
         (bk, bv, l, rids) for (bk, bv), (l, rids) in plan.multi.items()
     ] + [(bk, bv, 1, [rid]) for (bk, bv), rid in plan.single_det.items()]
-    if rows:
-        asg = spark.createDataFrame(rows, schema="bk int, bv string, l_ int, rids array<int>")
-        blocked = base.join(F.broadcast(asg), ["bk", "bv"], "left")
-    else:
-        blocked = base.withColumn("l_", F.lit(None).cast("int")).withColumn(
-            "rids", F.lit(None).cast("array<int>")
-        )
-    blocked = blocked.withColumn("l_", F.coalesce("l_", F.lit(1)))
-
-    fan = _fanout(blocked, seed)
-    fan = (
-        fan.withColumn(
-            "rid",
-            F.coalesce(
-                F.element_at("rids", F.col("cell") + 1),
-                (F.pmod(F.xxhash64("bk", "bv", F.lit(seed)), F.lit(k)) + 1).cast("int"),
-            ),
-        )
-        .drop("rids", "l_")
+    asg = spark.createDataFrame(rows, schema="bk int, bv string, l_ int, rids array<int>")
+    blocked = base.join(F.broadcast(asg), ["bk", "bv"], "left").withColumn(
+        "l_", F.coalesce("l_", F.lit(1))
     )
-    fan = tracked_persist(fan)
-    # materialize: the three role filters (L/R/S) below would each
-    # recompute the fan-out inside one job before the cache fills
-    fan.count()
+
+    rid = F.coalesce(
+        F.element_at("rids", F.col("cell") + 1),
+        (F.pmod(F.xxhash64("bk", "bv", F.lit(seed)), F.lit(k)) + 1).cast("int"),
+    )
+    # Both join sides read the fan-out: persisted, it is computed once
+    # (when the join first runs) and the smaller side can broadcast
+    # from the cache instead of both sides shuffling on the cell key.
+    fan = tracked_persist(_fanout(blocked, seed).withColumn("rid", rid).drop("rids", "l_"))
 
     carry = payload_cols + bv_cols
 
-    def side(tag: str, role: str) -> DataFrame:
-        cols = [
-            F.col("bk"),
-            F.col("bv"),
-            F.col("cell"),
-            F.col("rid"),
-            F.col("id_").alias(f"{tag}_id"),
-        ] + [F.col(c).alias(f"{tag}_{c}") for c in carry]
-        return fan.where(F.col("role") == role).select(*cols)
+    def side(tag: str, not_role: str, *keep: str) -> DataFrame:
+        cols = [F.col("bk"), F.col("bv"), F.col("cell"), F.col("id_").alias(f"{tag}_id")]
+        cols += [F.col(c).alias(f"{tag}_{c}") for c in carry]
+        return fan.where(F.col("role") != not_role).select(*cols, *keep)
 
-    join_keys = ["bk", "bv", "cell"]
-    # Off-diagonal cells: bipartite L×R (anchors differ, ids distinct).
-    lr = side("t1", "L").join(
-        side("t2", "R").withColumnsRenamed({"rid": "rid2"}), join_keys
+    # One equi-join on (bk, bv, cell). A cell is either diagonal (only
+    # S rows) or off-diagonal (only L and R rows), so "left not R,
+    # right not L" meets every L×R pair once and every S pair twice;
+    # the residual keeps one of the two (the rid is a function of the
+    # cell, so the left side's serves the pair).
+    pairs = side("t1", "R", "role", "rid").join(side("t2", "L"), ["bk", "bv", "cell"]).where(
+        (F.col("role") != "S") | (F.col("t1_id") < F.col("t2_id"))
     )
-    # Canonicalize id1 < id2 (anchor order is arbitrary).
-    swap = F.col("t1_id") > F.col("t2_id")
-    sel = [F.col("bk"), F.col("bv"), F.col("rid")]
-    sel += [
-        F.when(swap, F.col("t2_id")).otherwise(F.col("t1_id")).alias("id1"),
-        F.when(swap, F.col("t1_id")).otherwise(F.col("t2_id")).alias("id2"),
-        F.col("cell"),
-    ]
-    for c in carry:
-        sel += [
-            F.when(swap, F.col(f"t2_{c}")).otherwise(F.col(f"t1_{c}")).alias(f"t1_{c}"),
-            F.when(swap, F.col(f"t1_{c}")).otherwise(F.col(f"t2_{c}")).alias(f"t2_{c}"),
-        ]
-    lr = lr.select(*sel)
-
-    # Diagonal cells: self-pairs i<j within S.
-    s1 = side("t1", "S")
-    s2 = side("t2", "S").withColumnsRenamed({"rid": "rid2"})
-    ss = (
-        s1.join(s2, join_keys)
-        .where(F.col("t1_id") < F.col("t2_id"))
-        .select(
-            "bk",
-            "bv",
-            "rid",
-            F.col("t1_id").alias("id1"),
-            F.col("t2_id").alias("id2"),
-            "cell",
-            *[F.col(f"t1_{c}") for c in carry],
-            *[F.col(f"t2_{c}") for c in carry],
-        )
-    )
-
     # exactly-once guard, codegen form (no array ops per pair)
-    pairs = lr.unionByName(ss).where(F.col("bk") == lowest_common_block_scalar(rules))
-    out = ["bk", "id1", "id2"]
-    out += [f"t1_{c}" for c in payload_cols] + [f"t2_{c}" for c in payload_cols]
+    pairs = pairs.where(F.col("bk") == lowest_common_block_scalar(rules))
+    # Canonicalize id1 < id2 (anchor order is arbitrary; a no-op on
+    # diagonal cells, whose residual already ordered the ids).
+    swap = F.col("t1_id") > F.col("t2_id")
+
+    def pick(first: str, second: str) -> Column:
+        return F.when(swap, F.col(second)).otherwise(F.col(first))
+
+    out = [F.col("bk"), pick("t1_id", "t2_id").alias("id1"), pick("t2_id", "t1_id").alias("id2")]
+    out += [pick(f"t1_{c}", f"t2_{c}").alias(f"t1_{c}") for c in payload_cols]
+    out += [pick(f"t2_{c}", f"t1_{c}").alias(f"t2_{c}") for c in payload_cols]
     if with_cell_stats:
-        out += ["rid", "cell", "bv"]
+        out += [F.col("rid"), F.col("cell"), F.col("bv")]
     return pairs.select(*out)

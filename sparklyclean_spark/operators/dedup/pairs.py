@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 
 from sparklyclean_spark.operators.dedup.blocking import (
     BlockingRule,
+    blocked_rows,
     bv_col,
-    explode_blocks,
     lowest_common_block_scalar,
 )
 
@@ -41,46 +41,22 @@ def candidate_pairs_naive(
     reference shuffles entire CSV lines, SURVEY.md §4).
     """
     payload_cols = payload_cols or []
-    bv_cols = [bv_col(r.priority) for r in rules]
-    # Block keys are computed from the full row, THEN columns are pruned
-    # to id + payload + keys so only needed data shuffles.
-    base = explode_blocks(df, rules).select(
-        id_col, *payload_cols, *bv_cols, "bk", "bv"
-    )
+    carry = payload_cols + [bv_col(r.priority) for r in rules]
     # Downstream per-pair work (feature generation) inherits the join's
-    # stream-side parallelism. A small table arrives as ONE input split,
-    # which under a broadcast join serializes ALL pair comparisons into
-    # one task (measured 9 s -> 0.4 s for 4.5 M levenshteins at sf0.1).
-    # Fan the exploded rows out when the source is under-split; on a
-    # cluster the scan already has >= shuffle.partitions splits and this
-    # branch never triggers.
-    try:
-        target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        target = df.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
+    # stream-side parallelism; on a cluster the scan already has >=
+    # shuffle.partitions splits and the split guard never triggers.
+    splits = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    base = blocked_rows(df, rules, id_col, payload_cols, splits)
 
     def side(tag: str) -> DataFrame:
-        cols = [
-            F.col(id_col).alias(f"{tag}_id"),
-            F.col("bk").alias(f"{tag}_bk"),
-            F.col("bv").alias(f"{tag}_bv"),
-        ] + [F.col(c).alias(f"{tag}_{c}") for c in payload_cols + bv_cols]
-        return base.select(*cols)
+        cols = [F.col("id_").alias(f"{tag}_id")] + [F.col(c).alias(f"{tag}_{c}") for c in carry]
+        return base.select("bk", "bv", *cols)
 
-    a, b = side("t1"), side("t2")
-    joined = a.join(
-        b,
-        (F.col("t1_bk") == F.col("t2_bk"))
-        & (F.col("t1_bv") == F.col("t2_bv"))
-        & (F.col("t1_id") < F.col("t2_id")),
+    pairs = side("t1").join(side("t2"), ["bk", "bv"]).where(
+        (F.col("t1_id") < F.col("t2_id"))
+        # exactly-once guard, codegen form (no array ops per pair)
+        & (F.col("bk") == lowest_common_block_scalar(rules))
     )
-    # exactly-once guard, codegen form (no array ops per pair)
-    guarded = joined.where(F.col("t1_bk") == lowest_common_block_scalar(rules))
-    out_cols = [
-        F.col("t1_bk").alias("bk"),
-        F.col("t1_id").alias("id1"),
-        F.col("t2_id").alias("id2"),
-    ] + [F.col(f"t1_{c}") for c in payload_cols] + [F.col(f"t2_{c}") for c in payload_cols]
-    return guarded.select(*out_cols)
+    out = [F.col("bk"), F.col("t1_id").alias("id1"), F.col("t2_id").alias("id2")]
+    out += [F.col(f"t1_{c}") for c in payload_cols] + [F.col(f"t2_{c}") for c in payload_cols]
+    return pairs.select(*out)

@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from sparklyclean_spark.cache import tracked_persist
 from sparklyclean_spark.functions.vectors import _c, cosine_pandas
 
+_QUERY_CAP = 4096  # brute_force_topk's query set, collected to the driver
+
 
 def brute_force_topk(
     corpus: DataFrame,
@@ -49,9 +51,10 @@ def brute_force_topk(
 
     Returns (query_id, neighbor_id, cos, rank). Tie-break by
     neighbor_id for a total order. The bounded query set rides along
-    in the score function's closure (≤4096 queries, the pq query_cap
-    guard class) — corpus is scanned once regardless of |queries| and
-    raw corpus vectors cross the Python boundary exactly once.
+    in the score function's closure: more than 4096 queries raise
+    ``ValueError`` (the pq query_cap guard class). The corpus is
+    scanned once regardless of |queries| and raw corpus vectors cross
+    the Python boundary exactly once.
     """
     qid = query_id_col or id_col
     qvec = query_vec_col or vec_col
@@ -75,7 +78,9 @@ def brute_force_topk(
     # unchanged.
     import numpy as np
 
-    q_rows = q.orderBy("query_id").limit(4096).collect()
+    q_rows = q.orderBy("query_id").limit(_QUERY_CAP + 1).collect()
+    if len(q_rows) > _QUERY_CAP:
+        raise ValueError(f"more than {_QUERY_CAP} queries (brute_force_topk's cap): split them")
     qid_type = q.schema["query_id"].dataType.simpleString()
     nid_type = c.schema["neighbor_id"].dataType.simpleString()
     qids = [r["query_id"] for r in q_rows]

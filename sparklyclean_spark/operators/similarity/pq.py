@@ -214,7 +214,8 @@ def _collect_queries(queries: DataFrame, id_col: str, vec_col: str, query_cap: i
     """The bounded query set every ADC funnel builds its driver-side
     tables from: (query ids int64, L2-normalized (n x dim) float64
     matrix), id-ordered. More than ``query_cap`` queries raise instead
-    of being silently truncated (one extra row is fetched to tell)."""
+    of being silently truncated (one extra row is fetched to tell); so
+    does an empty query set, which has no matrix to build tables from."""
     import numpy as np
 
     rows = (
@@ -228,6 +229,8 @@ def _collect_queries(queries: DataFrame, id_col: str, vec_col: str, query_cap: i
             f"more than query_cap={query_cap} queries: raise query_cap or "
             "split the query set"
         )
+    if not rows:
+        raise ValueError("empty query set: a PQ funnel needs at least one query")
     qids = np.array([int(r["query_id"]) for r in rows], dtype=np.int64)
     return qids, _unit(np.array([r["qv"] for r in rows], dtype=np.float64))
 

@@ -7,6 +7,7 @@ from sparklyclean_spark.plans.audit import (
     has_broadcast_hash_join,
     has_nested_loop_join,
     has_pushed_filters,
+    join_keys,
     python_eval_count,
     read_schema_columns,
     whole_stage_codegen_spans,
@@ -19,6 +20,7 @@ __all__ = [
     "has_broadcast_hash_join",
     "has_nested_loop_join",
     "has_pushed_filters",
+    "join_keys",
     "python_eval_count",
     "read_schema_columns",
     "whole_stage_codegen_spans",

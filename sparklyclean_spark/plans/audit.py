@@ -52,23 +52,40 @@ def has_nested_loop_join(df: DataFrame) -> bool:
     return "NestedLoopJoin" in plan or "CartesianProduct" in plan
 
 
-def python_eval_count(df: DataFrame) -> int:
-    """Number of ``ArrowEvalPython`` nodes (Arrow-batched Python UDF
-    evaluations) the plan runs. A pure UDF whose output column a
-    filter references can be evaluated twice when the optimizer pushes
-    the filter below the projection — one extra node per duplicated
-    call site; the ``single_eval`` UDFs exist to prevent it. Subtrees
-    under an ``InMemoryRelation`` are skipped: a cached table's plan is
-    printed at every scan of it but ran once, when it was cached."""
-    n, cached_depth = 0, None
+def _uncached_lines(df: DataFrame):
+    """The simple-mode plan lines outside ``InMemoryRelation`` subtrees:
+    a cached table's plan is printed at every scan of it but ran once,
+    when it was cached."""
+    cached_depth = None
     for line in explain_str(df, "simple").splitlines():
         m = re.search(r"[+:]- ", line)
         depth = m.start() if m else 0
         if cached_depth is not None and depth > cached_depth:
             continue
         cached_depth = depth if "InMemoryRelation" in line else None
-        n += bool(re.search(r"\bArrowEvalPython\b", line))
-    return n
+        yield line
+
+
+def python_eval_count(df: DataFrame) -> int:
+    """Number of ``ArrowEvalPython`` nodes (Arrow-batched Python UDF
+    evaluations) the plan runs, cached subtrees skipped. A pure UDF
+    whose output column a filter references can be evaluated twice
+    when the optimizer pushes the filter below the projection — one
+    extra node per duplicated call site; the ``single_eval`` UDFs exist
+    to prevent it."""
+    return sum(bool(re.search(r"\bArrowEvalPython\b", line)) for line in _uncached_lines(df))
+
+
+def join_keys(df: DataFrame) -> list[list[str]]:
+    """One entry per join the plan runs (cached subtrees skipped): its
+    left-side equi-join key names, ``[]`` for a keyless join."""
+    out = []
+    for line in _uncached_lines(df):
+        m = re.search(r"\b(?:\w+Join|CartesianProduct)\b(?: \[([^\]]*)\], \[)?", line)
+        if m:
+            keys = (m.group(1) or "").split(",")
+            out.append([re.sub(r"#\d+L?$", "", k.strip()) for k in keys if k.strip()])
+    return out
 
 
 def has_pushed_filters(df: DataFrame, fragment: str) -> bool:

@@ -34,18 +34,37 @@ _DEFAULTS = {
     # Deterministic timestamp semantics across JVMs.
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
-    # Local mode runs driver+executor in ONE JVM with up to 32
-    # concurrent tasks (sort/shuffle buffers) plus persisted blocks —
-    # an undersized heap turns heavy operators into GC storms. On a
-    # real cluster spark-submit overrides this per-site.
-    "spark.driver.memory": "48g",
-    # Whole-stage codegen emits a new class per plan; a session running
-    # many distinct queries can fill the JIT's default 240 MB code
-    # cache, after which compilation stops and hot loops run
-    # INTERPRETED. Reserve more. -Xms keeps early heap growth out of
-    # the first heavy query's critical path.
-    "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -Xms8g",
 }
+
+# Local mode runs driver+executor in ONE JVM: an undersized heap turns
+# heavy operators into GC storms, an oversized one outgrows the host (a
+# fixed 48g heap was once OOM-killed mid-suite on a 16 GB host). So the
+# heap is half of physical memory, at most 48g, and -Xms (early heap
+# growth kept off the first heavy query's critical path) a quarter of
+# the heap, at most 8g. On a real cluster spark-submit overrides both.
+_MAX_HEAP_MIB, _MAX_XMS_MIB = 48 * 1024, 8 * 1024
+
+
+def session_conf(
+    extra_conf: dict[str, str] | None = None, phys_mib: int | None = None
+) -> dict[str, str]:
+    """The session's config: ``_DEFAULTS``, a driver heap sized from
+    ``phys_mib`` (default: this host's physical memory), then
+    ``extra_conf``. A caller that sets ``spark.driver.memory`` gets no
+    ``-Xms`` from here (the JVM's own initial size never exceeds the
+    heap), so lowering only the heap still gives a JVM that starts. The
+    larger code cache keeps a session of many distinct codegen'd plans
+    from filling the JIT's default 240 MB and running hot loops
+    interpreted."""
+    if phys_mib is None:
+        phys_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    extra = extra_conf or {}
+    heap = min(phys_mib // 2, _MAX_HEAP_MIB)
+    jvm = "-XX:ReservedCodeCacheSize=1g"
+    if "spark.driver.memory" not in extra:
+        jvm += f" -Xms{min(heap // 4, _MAX_XMS_MIB)}m"
+    conf = {**_DEFAULTS, "spark.driver.memory": f"{heap}m", "spark.driver.extraJavaOptions": jvm}
+    return {**conf, **extra}
 
 
 def get_spark(
@@ -62,9 +81,6 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULTS)
-    if extra_conf:
-        conf.update(extra_conf)
-    for key, value in conf.items():
+    for key, value in session_conf(extra_conf).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -29,6 +29,7 @@ RULES = [
     BlockingRule(1, "blocking_number"),
     BlockingRule(2, "state"),
 ]
+PAYLOAD = ["given_name", "surname", "postcode"]
 
 
 @pytest.fixture(scope="module")
@@ -40,13 +41,13 @@ def people(spark):
 
 @pytest.fixture(scope="module")
 def naive_pairs(people):
-    return candidate_pairs_naive(people, RULES, "rec_id").cache()
+    return candidate_pairs_naive(people, RULES, "rec_id", PAYLOAD).cache()
 
 
 @pytest.fixture(scope="module")
 def tri_pairs(people):
     return candidate_pairs_disdedup(
-        people, RULES, "rec_id", k=49, with_cell_stats=True
+        people, RULES, "rec_id", PAYLOAD, k=49, with_cell_stats=True
     ).cache()
 
 
@@ -67,13 +68,37 @@ def test_exactly_once_triangle(tri_pairs):
 
 
 def test_triangle_equals_naive(naive_pairs, tri_pairs):
-    """The load-balanced path must produce the identical pair set
-    (including the bk each pair is attributed to)."""
-    a = naive_pairs.select("bk", "id1", "id2")
-    b = tri_pairs.select("bk", "id1", "id2")
+    """The load-balanced path must produce the identical pair rows:
+    the bk each pair is attributed to, and the payload of each side
+    following the id1 < id2 swap."""
+    a = naive_pairs
+    b = tri_pairs.select(*naive_pairs.columns)
+    assert len(a.columns) == 3 + 2 * len(PAYLOAD)
     assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def test_disdedup_builds_without_fanout_job_and_joins_once(people):
+    """Building the pairs runs only the planning collects: the cached
+    blocked rows they read are the one cache filled, the persisted
+    fan-out is not (no eager job fills it; the pair join does). The
+    pairs come from ONE join keyed on (bk, bv, cell) — no second cell
+    join or union (cached subtrees are skipped)."""
+    from sparklyclean_spark import plans as P
+
+    sc = people.sparkSession.sparkContext
+
+    def cached_rdds() -> set[int]:
+        infos = sc._jsc.sc().getRDDStorageInfo()
+        return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+    before = cached_rdds()
+    # k=47: a plan no other test caches, so both persists are new
+    out = candidate_pairs_disdedup(people, RULES, "rec_id", ["surname"], k=47)
+    assert len(cached_rdds() - before) == 1
+    assert P.join_keys(out) == [["bk", "bv", "cell"]]
+    assert "Union" not in P.explain_str(out, "simple")
 
 
 def test_pairs_share_a_block(people, naive_pairs):

@@ -237,7 +237,8 @@ def test_pq_topk_duplicate_ranks_first_and_is_deterministic(spark):
 def test_pq_funnels_reject_queries_beyond_cap(spark, funnel):
     """More queries than ``query_cap`` must raise, naming the cap —
     not silently answer only the first ``query_cap`` ids. Exactly
-    ``query_cap`` queries are all answered."""
+    ``query_cap`` queries are all answered. An empty query set raises
+    a clear error, not numpy's ``AxisError``."""
     import random
 
     from sparklyclean_spark.operators.similarity import pq
@@ -253,6 +254,8 @@ def test_pq_funnels_reject_queries_beyond_cap(spark, funnel):
         fn(emb, emb.where("vec_id < 3"), query_cap=2, **kw)
     out = fn(emb, emb.where("vec_id < 2"), query_cap=2, **kw).collect()
     assert sorted({r.query_id for r in out}) == [0, 1]
+    with pytest.raises(ValueError, match="empty query set"):
+        fn(emb, emb.where("vec_id < 0"), query_cap=2, **kw)
 
 
 def test_pq_distortion_shape_and_dup_corpus_zero(spark):

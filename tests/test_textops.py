@@ -87,6 +87,19 @@ def test_knn_lsh_recall(emb):
     assert recall >= 0.3, f"ANN recall {recall}"
 
 
+def test_brute_force_topk_rejects_queries_beyond_cap(spark):
+    """4097 queries must raise, naming the 4096 cap — not silently
+    answer only the first 4096 ids."""
+    corpus = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(3)], "vec_id bigint, embedding array<double>"
+    )
+    queries = spark.range(4097).select(
+        F.col("id").alias("vec_id"), F.array(F.lit(1.0), F.lit(0.0)).alias("embedding")
+    )
+    with pytest.raises(ValueError, match="more than 4096 queries"):
+        brute_force_topk(corpus, queries, k=1)
+
+
 def test_knn_ivf_recall(emb):
     """IVF probe of 8/32 cells (25% of corpus per query) must recover
     a solid fraction of brute-force top-5 even on near-orthogonal
