@@ -28,11 +28,6 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Dimension tables small enough to broadcast at any realistic scale
-# (region=5 rows, nation=25 rows at every TPC-H SF).
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
-
 # Columns written as parquet TIMESTAMP(NANOS) — Spark has no nanosecond
 # timestamp type, so these read as bigint (nanosAsLong) and are converted
 # to TIMESTAMP_NTZ at microsecond precision, matching what DuckDB/Arrow

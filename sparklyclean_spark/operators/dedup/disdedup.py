@@ -7,12 +7,17 @@ Spark-first:
 
 * Block statistics = one DataFrame aggregation (reference A1-A4,
   ``Setup.scala:31-57``).
-* Driver-side planning is O(#heavy blocks) only: blocks whose
-  pairwise workload exceeds the random-assignment threshold
-  ``tau = W/(3k ln k)`` (at most ~3k·ln k of them) are collected and
-  planned; the long tail is assigned DISTRIBUTED-side via hash —
-  unlike the reference, which collects every block to the driver
-  (``Setup.scala:68-89``), this keeps the driver O(k log k) at 100 TB.
+* Driver-side planning is ONE query and O(k log k) rows: the total
+  workload W is observed on the block-size aggregate while the same
+  ``collect()`` takes its ``heavy_candidates(k)`` = ⌈3k·ln k⌉ largest
+  blocks. More blocks than that cannot all exceed the
+  random-assignment threshold ``tau = W/(3k ln k)`` (together they
+  would exceed W), so every heavy block is among them and the driver
+  filters them by tau and plans them; the long tail is assigned
+  DISTRIBUTED-side via hash — unlike the reference, which collects
+  every block to the driver (``Setup.scala:68-89``). The heavy-block
+  assignment goes back as a local relation (an Arrow table), so its
+  broadcast runs no job on Python workers.
 * Triangle fan-out (``DisDedupMapper.scala:13-51``): a block given
   ``k_i = l(l+1)/2`` cells replicates each row to ``l`` cells of an
   upper-triangular l×l grid; every anchor pair meets in exactly one
@@ -42,7 +47,8 @@ import math
 import random
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from sparklyclean_spark.cache import tracked_persist
@@ -54,6 +60,9 @@ from sparklyclean_spark.operators.dedup.blocking import (
 )
 
 DEFAULT_SEED = 647  # the reference's fixed seed (GenerateLabeledPoints.scala:71)
+_ASG = pa.schema(
+    [("bk", pa.int32()), ("bv", pa.string()), ("l_", pa.int32()), ("rids", pa.list_(pa.int32()))]
+)
 
 
 def triangle_side(k_i: int) -> int:
@@ -70,10 +79,6 @@ def triangle_side(k_i: int) -> int:
 class DisDedupPlan:
     """Driver-side assignment for heavy blocks; tail blocks hash."""
 
-    k: int
-    total_workload: int
-    w_per_reducer: float
-    tau: float
     # (bk, bv) -> (l, [rid per cell]) for multi-reducer blocks
     multi: dict[tuple[int, str], tuple[int, list[int]]] = field(default_factory=dict)
     # (bk, bv) -> rid for deterministically-placed single-reducer blocks
@@ -92,6 +97,34 @@ def heavy_threshold(total_workload: int, k: int) -> float:
     return total_workload / k if k else float("inf")
 
 
+def heavy_candidates(k: int) -> int:
+    """How many of the largest blocks hold every heavy block:
+    ⌈3k·ln k⌉ (k for k < 3). More blocks than that cannot all exceed
+    ``heavy_threshold(W, k)``, since together they would exceed W."""
+    return math.ceil(3 * k * math.log(k)) if k >= 3 else k
+
+
+def block_stats(base: DataFrame, k: int) -> tuple[int, list[tuple[int, str, int]]]:
+    """The total workload W and the heavy blocks [(bk, bv, n_rows)],
+    from ONE query over the blocked rows: W is observed on the
+    block-size aggregate while the same ``collect()`` takes its
+    ``heavy_candidates(k)`` largest blocks (ties by bk, bv), which the
+    driver filters by ``heavy_threshold``."""
+    obs = Observation()
+    sizes = base.groupBy("bk", "bv").agg(F.count(F.lit(1)).alias("n")).where("n >= 2")
+    top = (
+        sizes.observe(obs, F.sum(F.expr("n * (n - 1) div 2")).alias("w"))
+        .orderBy(F.desc("n"), "bk", "bv")
+        .limit(heavy_candidates(k))
+        .collect()
+    )
+    total_w = int(obs.get["w"] or 0)
+    tau = heavy_threshold(total_w, k)
+    return total_w, [
+        (r["bk"], r["bv"], r["n"]) for r in top if r["n"] * (r["n"] - 1) // 2 > tau
+    ]
+
+
 def plan_assignment(
     heavy: list[tuple[int, str, int]],
     total_workload: int,
@@ -107,7 +140,7 @@ def plan_assignment(
     sorted-block order so the plan is reproducible (fixes G5).
     """
     w_per_reducer = total_workload / k if k else float("inf")
-    plan = DisDedupPlan(k, total_workload, w_per_reducer, heavy_threshold(total_workload, k))
+    plan = DisDedupPlan()
     if not heavy:
         return plan
 
@@ -196,27 +229,23 @@ def candidate_pairs_disdedup(
         k = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
     bv_cols = [bv_col(r.priority) for r in rules]
-    # base feeds the stats job AND the fan-out: persist it so the
+    # base feeds the stats query AND the fan-out: persist it so the
     # scan+explode chain runs once. The split guard keeps the cell join
     # parallel when AQE broadcasts one side of it.
     base = tracked_persist(blocked_rows(df, rules, id_col, payload_cols, k))
-
-    # --- stats job: block sizes; only heavy blocks reach the driver.
-    stats = base.groupBy("bk", "bv").agg(F.count(F.lit(1)).alias("n")).where("n >= 2")
-    total_w = int(stats.select(F.sum(F.expr("n * (n - 1) div 2"))).collect()[0][0] or 0)
-    tau = heavy_threshold(total_w, k)
-    heavy = [
-        (r["bk"], r["bv"], r["n"])
-        for r in stats.where(F.expr(f"n * (n - 1) div 2 > {tau}")).collect()
-    ]
+    total_w, heavy = block_stats(base, k)
     plan = plan_assignment(heavy, total_w, k, seed)
 
     # --- broadcast the heavy-block assignment; tail blocks get l=1
-    # and a hash-derived reducer id (never touches the driver).
+    # and a hash-derived reducer id (never touches the driver). An
+    # Arrow table plans as a LocalTableScan; a Python list would plan
+    # as an RDD scan whose broadcast runs a job on Python workers.
     rows = [
         (bk, bv, l, rids) for (bk, bv), (l, rids) in plan.multi.items()
     ] + [(bk, bv, 1, [rid]) for (bk, bv), rid in plan.single_det.items()]
-    asg = spark.createDataFrame(rows, schema="bk int, bv string, l_ int, rids array<int>")
+    asg = spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(_ASG.names, r)) for r in rows], schema=_ASG
+    ))
     blocked = base.join(F.broadcast(asg), ["bk", "bv"], "left").withColumn(
         "l_", F.coalesce("l_", F.lit(1))
     )

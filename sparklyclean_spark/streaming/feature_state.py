@@ -45,7 +45,6 @@ def output_schema(key_col: str = "user_id", key_type: str = "bigint") -> str:
     return f"{key_col} {key_type}, n_events bigint, sum_value double, last_ts timestamp"
 
 
-OUTPUT_SCHEMA = output_schema()
 _STATE_SCHEMA = "n bigint, sv double, last timestamp"
 
 

@@ -51,7 +51,6 @@ def output_schema(key_col: str = "user_id", key_type: str = "bigint") -> str:
     )
 
 
-OUTPUT_SCHEMA = output_schema()
 # open sessions as parallel arrays (epoch-MICROSECOND bigints for the
 # bounds: array<timestamp> round-trips through the state encoder less
 # predictably than plain longs, and micros is parquet's native unit)

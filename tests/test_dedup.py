@@ -5,8 +5,10 @@ naive differential equality, bounded per-reducer workload.
 from __future__ import annotations
 
 import math
+import re
 import time
 
+import pyarrow as pa
 import pytest
 
 
@@ -16,10 +18,14 @@ def _timed(fn) -> float:
     return time.perf_counter() - t0
 from pyspark.sql import functions as F
 
-from sparklyclean_spark.operators.dedup.blocking import BlockingRule
+from sparklyclean_spark import plans as P
+from sparklyclean_spark.operators.dedup.blocking import BlockingRule, blocked_rows, explode_blocks
 from sparklyclean_spark.operators.dedup.pairs import candidate_pairs_naive
 from sparklyclean_spark.operators.dedup.disdedup import (
+    block_stats,
     candidate_pairs_disdedup,
+    heavy_candidates,
+    heavy_threshold,
     plan_assignment,
     triangle_side,
 )
@@ -79,26 +85,45 @@ def test_triangle_equals_naive(naive_pairs, tri_pairs):
     assert b.exceptAll(a).count() == 0
 
 
+_ASG_SCAN = re.compile(r"LocalTableScan \[bk#\d+, bv#\d+, l_#\d+, rids#\d+\]")
+
+
+def _build_in_one_query(df, *args, **kwargs):
+    """``candidate_pairs_disdedup``, asserting its build shape: ONE SQL
+    execution (the planning collect) and no RDD scan anywhere in the
+    returned plan (broadcasting one runs a job on Python workers)."""
+    store = df.sparkSession._jsparkSession.sharedState().statusStore()
+    before = store.executionsCount()
+    out = candidate_pairs_disdedup(df, *args, **kwargs)
+    assert store.executionsCount() - before == 1
+    assert "ExistingRDD" not in P.explain_str(out, "simple")
+    return out
+
+
 def test_disdedup_builds_without_fanout_job_and_joins_once(people):
-    """Building the pairs runs only the planning collects: the cached
-    blocked rows they read are the one cache filled, the persisted
+    """Building the pairs runs only the planning query: the cached
+    blocked rows it reads are the one cache filled, the persisted
     fan-out is not (no eager job fills it; the pair join does). The
     pairs come from ONE join keyed on (bk, bv, cell) — no second cell
     join or union (cached subtrees are skipped)."""
-    from sparklyclean_spark import plans as P
-
-    sc = people.sparkSession.sparkContext
+    spark = people.sparkSession
+    sc = spark.sparkContext
 
     def cached_rdds() -> set[int]:
         infos = sc._jsc.sc().getRDDStorageInfo()
         return {i.id() for i in infos if i.numCachedPartitions() > 0}
 
+    # an Arrow copy: the fixture's own rows plan as an RDD scan
+    local = spark.createDataFrame(people.toArrow())
     before = cached_rdds()
     # k=47: a plan no other test caches, so both persists are new
-    out = candidate_pairs_disdedup(people, RULES, "rec_id", ["surname"], k=47)
+    out = _build_in_one_query(local, RULES, "rec_id", ["surname"], k=47)
     assert len(cached_rdds() - before) == 1
     assert P.join_keys(out) == [["bk", "bv", "cell"]]
-    assert "Union" not in P.explain_str(out, "simple")
+    plan = P.explain_str(out, "simple")
+    assert "Union" not in plan
+    # the heavy-block assignment is a local relation
+    assert _ASG_SCAN.search(plan)
 
 
 def test_pairs_share_a_block(people, naive_pairs):
@@ -167,8 +192,6 @@ def test_skew_stress_equality_and_bound(skewed_people):
     the worst (bk, bv) key alone carries >50% of total pair work
     (measured: 74%, 17.5x the triangle path's max reducer), which on a
     real cluster is one straggler reducer doing most of the job."""
-    from sparklyclean_spark.operators.dedup.blocking import explode_blocks
-
     naive = candidate_pairs_naive(skewed_people, RULES, "rec_id").cache()
     tri = candidate_pairs_disdedup(
         skewed_people, RULES, "rec_id", k=49, with_cell_stats=True
@@ -203,6 +226,63 @@ def test_skew_stress_equality_and_bound(skewed_people):
         tri.unpersist()
 
 
+def _many_blocks(spark):
+    """570 blocking-number blocks of 4 rows and 12 of 2 rows, every
+    state a singleton: 582 blocks, more than ``heavy_candidates(49)``
+    (573), so the planning query's limit truncates; and at k=49 each
+    4-row block (6 pairs) exceeds τ = 3432/(3·49·ln 49) ≈ 5.999, so all
+    570 heavy blocks must survive the cut."""
+    sizes = [4] * 570 + [2] * 12
+    bn = [str(j) for j, n in enumerate(sizes) for _ in range(n)]
+    return spark.createDataFrame(pa.Table.from_pydict({
+        "rec_id": pa.array(range(len(bn)), pa.int64()),
+        "blocking_number": bn,
+        "state": [f"s{i}" for i in range(len(bn))],
+    }))
+
+
+# Per k: (pairs, Σ xxhash64(bk, id1, id2, rid, cell)) of the skewed
+# fixture's cell-stats pairs, pinned from the two-collect planner (a W
+# collect, then a τ-filtered block collect) that block_stats replaced.
+_SKEWED_CELLS = {
+    1: (48095, 852957527332116448955),
+    2: (48095, -251224104101408189680),
+    3: (48095, -249681593697749848702),
+    49: (48095, 72826092786112985432),
+}
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 49])
+def test_block_stats_match_direct_workload(spark, skewed_people, k):
+    """The one planning query (W observed, the top
+    ``heavy_candidates(k)`` blocks collected) gives the W and heavy set
+    of a direct Σ C(n,2) over every block filtered by > τ, also where
+    the limit truncates; and the skewed pairs keep every (rid, cell)
+    the two-collect planner gave them."""
+    many = _many_blocks(spark)
+    for df in (skewed_people, many):
+        sizes = explode_blocks(df, RULES).groupBy("bk", "bv").count().collect()
+        w = sum(r["count"] * (r["count"] - 1) // 2 for r in sizes)
+        tau = heavy_threshold(w, k)
+        heavy = sorted(
+            (r["bk"], r["bv"], r["count"])
+            for r in sizes
+            if r["count"] * (r["count"] - 1) // 2 > tau
+        )
+        got_w, got_heavy = block_stats(blocked_rows(df, RULES, "rec_id", [], k), k)
+        assert (got_w, sorted(got_heavy)) == (w, heavy)
+        if df is many:
+            assert sum(r["count"] >= 2 for r in sizes) > heavy_candidates(49)
+            assert len(heavy) == (570 if k == 49 else 0)
+    cells = candidate_pairs_disdedup(
+        skewed_people, RULES, "rec_id", k=k, with_cell_stats=True
+    ).agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64("bk", "id1", "id2", "rid", "cell").cast("decimal(38,0)")),
+    ).collect()[0]
+    assert (cells[0], int(cells[1])) == _SKEWED_CELLS[k]
+
+
 def test_plan_assignment_deterministic():
     heavy = [(2, "nsw", 600), (2, "vic", 400), (1, "3", 120)]
     total = sum(n * (n - 1) // 2 for _, _, n in heavy) + 5000
@@ -220,16 +300,18 @@ def test_disdedup_no_pairs_matches_naive_schema(spark):
     """A table whose blocks are all singletons (and an empty table)
     has zero workload: the general plan must return 0 rows with the
     naive path's column types, and the cell-stats columns typed too."""
-    rows = [(i, str(100 + i), f"s{i}", f"n{i}") for i in range(6)]
-    df = spark.createDataFrame(
-        rows, "rec_id bigint, blocking_number string, state string, name string"
-    )
+    df = spark.createDataFrame(pa.Table.from_pydict({
+        "rec_id": pa.array(range(6), pa.int64()),
+        "blocking_number": [str(100 + i) for i in range(6)],
+        "state": [f"s{i}" for i in range(6)],
+        "name": [f"n{i}" for i in range(6)],
+    }))
     for t in (df, df.limit(0)):
         naive = candidate_pairs_naive(t, RULES, "rec_id", ["name"])
-        tri = candidate_pairs_disdedup(t, RULES, "rec_id", ["name"], k=7)
+        tri = _build_in_one_query(t, RULES, "rec_id", ["name"], k=7)
         assert tri.count() == 0
         assert tri.dtypes == naive.dtypes
-        stats = candidate_pairs_disdedup(
+        stats = _build_in_one_query(
             t, RULES, "rec_id", ["name"], k=7, with_cell_stats=True
         )
         assert stats.count() == 0

@@ -5,20 +5,22 @@ Two checks over the package, its tests, scripts, the driver entry,
 
 * every ``sparklyclean_spark`` module (``__init__``/``__main__``
   aside) is imported somewhere in that set;
-* every top-level ``def``/``class`` in the package is referenced as a
-  name token (code, not a comment or string) somewhere other than its
-  own definition.
+* every top-level ``def``/``class`` and UPPER_CASE constant
+  assignment in the package is referenced as a name token (code, not
+  a comment or string) somewhere other than its own definition.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 import tokenize
 from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "sparklyclean_spark"
+CONSTANT = re.compile(r"_*[A-Z][A-Z0-9_]*")
 
 
 def _py_files() -> list[str]:
@@ -84,6 +86,19 @@ def test_every_package_module_is_imported():
     assert not orphans, f"modules nothing imports: {orphans}"
 
 
+def _top_level_names(node: ast.stmt) -> list[str]:
+    """The names a top-level statement defines: a ``def``/``class``,
+    or the UPPER_CASE targets of a plain or annotated assignment."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    targets = node.targets if isinstance(node, ast.Assign) else (
+        [node.target] if isinstance(node, ast.AnnAssign) else []
+    )
+    return [
+        t.id for t in targets if isinstance(t, ast.Name) and CONSTANT.fullmatch(t.id)
+    ]
+
+
 def test_every_top_level_definition_is_referenced():
     files = _py_files()
     tokens = _name_tokens(files)
@@ -91,11 +106,7 @@ def test_every_top_level_definition_is_referenced():
     for path in filter(_in_package, files):
         with open(path, encoding="utf-8") as f:
             body = ast.parse(f.read()).body
-        defs += [
-            (_module_name(path), n.name)
-            for n in body
-            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        ]
+        defs += [(_module_name(path), name) for n in body for name in _top_level_names(n)]
     n_defs = Counter(name for _, name in defs)
     dead = [
         f"{mod}.{name}"
