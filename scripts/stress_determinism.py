@@ -8,27 +8,12 @@ prefix-sum race and the deep when-chain stack overflow that repeated
 same-config reruns never caught.
 
 Usage: python scripts/stress_determinism.py [query ...]
-(defaults below; ~6 min for 6 queries)
-
-different core counts, shuffle partitions, AQE coalesce settings.
-Every config must produce ONE hash per query."""
-import hashlib, math, sys
-from datetime import datetime, date
+(defaults below; ~6 min for 6 queries). Hashes with the driver
+simulation's value hash (``driver_sim.valhash``); exits 1 when any
+query has more than one hash."""
+import sys
 sys.path.insert(0, "/root/repo")
-
-def norm(v):
-    if v is None: return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v): return "NULL"
-        return f"{round(v, 4):.4f}"
-    if isinstance(v, datetime): return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, date): return v.isoformat()
-    return str(v)
-
-def valhash(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("|".join(norm(r[i]) for i in order) for r in rows)
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+from driver_sim import valhash
 
 import sys as _sys
 NAMES = _sys.argv[1:] or [
@@ -66,3 +51,4 @@ for ci, cfg in enumerate(CONFIGS):
 bad = {n: hs for n, hs in hashes.items() if len(hs) != 1}
 print("RESULT:", "ALL STABLE" if not bad else f"UNSTABLE: {bad}")
 for n, hs in hashes.items(): print(" ", n, hs)
+sys.exit(1 if bad else 0)

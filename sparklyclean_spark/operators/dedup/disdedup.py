@@ -94,7 +94,7 @@ def heavy_threshold(total_workload: int, k: int) -> float:
     For k < 3 (ln k too small to bound anything) it is W/k."""
     if k >= 3:
         return total_workload / (3.0 * k * math.log(k))
-    return total_workload / k if k else float("inf")
+    return total_workload / k
 
 
 def heavy_candidates(k: int) -> int:
@@ -139,7 +139,7 @@ def plan_assignment(
     and continuing round-robin, ``README.md:63-72``), but iterates in
     sorted-block order so the plan is reproducible (fixes G5).
     """
-    w_per_reducer = total_workload / k if k else float("inf")
+    w_per_reducer = total_workload / k
     plan = DisDedupPlan()
     if not heavy:
         return plan
@@ -227,6 +227,8 @@ def candidate_pairs_disdedup(
     payload_cols = payload_cols or []
     if k is None:
         k = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    if k < 1:
+        raise ValueError(f"k must be at least 1 reducer, got k={k}")
 
     bv_cols = [bv_col(r.priority) for r in rules]
     # base feeds the stats query AND the fan-out: persist it so the

@@ -320,6 +320,17 @@ def test_disdedup_no_pairs_matches_naive_schema(spark):
         ]
 
 
+@pytest.mark.parametrize("k", [0, -1])
+def test_disdedup_rejects_k_below_one(people, k):
+    """Fewer than one reducer is refused with a ValueError naming k,
+    before any Spark job runs."""
+    store = people.sparkSession._jsparkSession.sharedState().statusStore()
+    before = store.executionsCount()
+    with pytest.raises(ValueError, match=r"\bk\b"):
+        candidate_pairs_disdedup(people, RULES, "rec_id", PAYLOAD, k=k)
+    assert store.executionsCount() == before
+
+
 def test_jaro_winkler_reference_values(spark):
     """Classic published JW values + edge conventions (empty -> 0.0,
     identical -> 1.0, sub-threshold pairs get NO prefix boost)."""

@@ -8,6 +8,10 @@ Two checks over the package, its tests, scripts, the driver entry,
 * every top-level ``def``/``class`` and UPPER_CASE constant
   assignment in the package is referenced as a name token (code, not
   a comment or string) somewhere other than its own definition.
+
+And one over the scripts and the two documents that say how to run
+them (``README.md``, the verify skill): every ``scripts/*.py`` is
+named there, and every ``scripts/<name>.py`` named there exists.
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ from collections import Counter
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "sparklyclean_spark"
 CONSTANT = re.compile(r"_*[A-Z][A-Z0-9_]*")
+RUN_DOCS = ("README.md", os.path.join(".claude", "skills", "verify", "SKILL.md"))
+SCRIPT_REF = re.compile(r"\bscripts/(\w+\.py)\b")
 
 
 def _py_files() -> list[str]:
@@ -114,3 +120,13 @@ def test_every_top_level_definition_is_referenced():
         if tokens[name] <= n_defs[name]
     ]
     assert not dead, f"top-level definitions nothing references: {dead}"
+
+
+def test_scripts_and_run_docs_agree():
+    named: set[str] = set()
+    for doc in RUN_DOCS:
+        with open(os.path.join(ROOT, doc), encoding="utf-8") as f:
+            named.update(SCRIPT_REF.findall(f.read()))
+    present = {f for f in os.listdir(os.path.join(ROOT, "scripts")) if f.endswith(".py")}
+    assert not present - named, f"scripts no run doc names: {sorted(present - named)}"
+    assert not named - present, f"run docs name missing scripts: {sorted(named - present)}"
