@@ -8,6 +8,11 @@ Starts the benchmark's session (same heap and settings as
 warm-up repetitions, then one checked repetition under a job group of
 its own, and prints:
 
+* the repetition's wall time (``run`` only, as perfbench times it),
+  its driver-only time (wall minus the union of its SQL executions'
+  intervals: building DataFrames, planning outside a query, Python
+  between actions) and its Python->JVM py4j round trips (every
+  ``GatewayClient.send_command``, counted by wrapping it here);
 * one line per SQL execution of that repetition: start offset from
   the repetition's start, wall time, jobs, tasks, call site;
 * one line per stage: tasks, task run time, task CPU time and their
@@ -33,15 +38,43 @@ import run  # noqa: E402  perfbench/run.py
 from sparkstats import _iter, job_ids  # noqa: E402
 
 GROUP = "exec_timeline"
+_SENT = [0]  # py4j commands sent since start
 
 
-def _rep(wl) -> None:
+def _count_py4j() -> None:
+    from py4j.java_gateway import GatewayClient
+
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        _SENT[0] += 1
+        return send(self, *args, **kwargs)
+
+    GatewayClient.send_command = counted
+
+
+def _rep(wl) -> tuple[float, int]:
+    """One checked repetition: wall time and py4j round trips of
+    ``run``; the check and the cache release come after."""
     from sparklyclean_spark.cache import release_caches
 
     try:
-        wl.check(wl.run())
+        sent0, t0 = _SENT[0], time.perf_counter()
+        out = wl.run()
+        wall, sent = time.perf_counter() - t0, _SENT[0] - sent0
+        wl.check(out)
     finally:
         release_caches()
+    return wall, sent
+
+
+def _union_s(intervals: list[tuple[float, float]]) -> float:
+    """Total length of the union of [start, end) intervals."""
+    total, reach = 0.0, float("-inf")
+    for start, end in sorted(intervals):
+        total += max(0.0, end - max(start, reach))
+        reach = max(reach, end)
+    return total
 
 
 def _short(call_site: str) -> str:
@@ -59,8 +92,10 @@ def _stages(spark, job: int) -> list:
     return out
 
 
-def timeline(spark, t0_ms: float) -> None:
-    """Print the executions and stages of every job run under GROUP."""
+def timeline(spark, t0_ms: float, end_ms: float) -> None:
+    """Print the executions and stages of every job run under GROUP,
+    and the repetition's driver-only time ([t0_ms, end_ms] outside
+    every execution)."""
     jobs = set(job_ids(spark, [GROUP]))
     sql = spark._jsparkSession.sharedState().statusStore()
     execs = []
@@ -73,6 +108,12 @@ def timeline(spark, t0_ms: float) -> None:
              _short(ex.description())) for ex, ex_jobs in execs]
     if jobs - placed:
         rows.append((None, None, None, sorted(jobs - placed), "(no SQL execution)"))
+    busy = [(max(start, t0_ms), min(end.get().getTime(), end_ms))
+            for _, start, end, _, _ in rows
+            if start is not None and end is not None and end.isDefined()]
+    rep_s = (end_ms - t0_ms) / 1e3
+    print(f"driver-only {rep_s - _union_s(busy) / 1e3:.3f} s of {rep_s:.3f} s "
+          f"({len(busy)} SQL executions)")
 
     print(f"{'exec':>5} {'start_s':>8} {'wall_s':>7} {'jobs':>5} {'tasks':>6}  call site")
     stage_rows = []
@@ -111,6 +152,7 @@ def main(argv: list[str]) -> int:
         print(f"unknown workload {argv[0]!r}; one of {sorted(WORKLOADS)}", file=sys.stderr)
         return 2
     spark = None
+    _count_py4j()
     try:
         spark = run._start_spark(work, len(os.sched_getaffinity(0)))
         wl = WORKLOADS[argv[0]](spark, work, int(argv[1]) if len(argv) == 2 else 1)
@@ -123,11 +165,11 @@ def main(argv: list[str]) -> int:
         sc.setLocalProperty("spark.jobGroup.id", GROUP)
         t0_ms = time.time() * 1e3
         try:
-            _rep(wl)
+            wall, sent = _rep(wl)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        print(f"{wl.name}: one warm repetition, {(time.time() * 1e3 - t0_ms) / 1e3:.3f} s")
-        timeline(spark, t0_ms)
+        print(f"{wl.name}: one warm repetition, {wall:.3f} s, {sent} py4j round trips")
+        timeline(spark, t0_ms, t0_ms + wall * 1e3)
     finally:
         if spark is not None:
             run._stop_spark(spark)

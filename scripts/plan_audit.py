@@ -19,10 +19,11 @@ Usage: python scripts/plan_audit.py [query ...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.001"
 

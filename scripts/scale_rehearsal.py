@@ -33,10 +33,11 @@ Usage:  python scripts/scale_rehearsal.py [copies] [k]
 Prints one JSON line; paste the table into README.md when re-run.
 """
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F

@@ -17,10 +17,11 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def records() -> tuple[dict[str, int], int]:

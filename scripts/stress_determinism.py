@@ -11,12 +11,13 @@ Usage: python scripts/stress_determinism.py [query ...]
 (defaults below; ~6 min for 6 queries). Hashes with the driver
 simulation's value hash (``driver_sim.valhash``); exits 1 when any
 query has more than one hash."""
+import os
 import sys
-sys.path.insert(0, "/root/repo")
-from driver_sim import valhash
 
-import sys as _sys
-NAMES = _sys.argv[1:] or [
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from driver_sim import valhash  # noqa: E402  scripts/driver_sim.py
+
+NAMES = sys.argv[1:] or [
     "pack_training_sequences", "dense_ids_documents",
     "text_repetition_signals", "text_bm25_rank",
     "text_unigram_cross_entropy", "sample_docs_exact_k_weighted",

@@ -2,8 +2,13 @@
 
 Re-expresses the reference's scalar comparison functions
 (``Compare.scala:14-81`` in david-siqi-liu/sparklyclean) as Spark
-Column expressions so feature generation runs inside whole-stage
-codegen — no Python in the per-pair hot path.
+expressions so feature generation runs inside whole-stage codegen — no
+Python in the per-pair hot path. Each comparator is one definition in
+SQL text over backtick-quoted column names, made into a Column by one
+``F.expr`` (``functions/sqltext.py``; built from Column calls, a
+comparator cost tens of py4j round trips). Arguments are column
+names or plain ``F.col`` references. ``jaro_winkler`` is the
+exception: a pandas UDF over any Columns.
 
 Semantics preserved from the reference (SURVEY.md §2.6, §2.9):
 
@@ -23,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from sparklyclean_spark.functions.sqltext import col_sql
+
 # java.lang.Double.MAX_VALUE — the reference's one-side-missing sentinel.
 DOUBLE_MAX_SENTINEL = 1.7976931348623157e308
 
@@ -31,69 +38,100 @@ def _as_col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def _is_missing(c: Column) -> Column:
+def _text(x: str) -> str:
+    """SQL text ``x`` as a string, NULL read as ``''``."""
+    return f"coalesce(cast({x} as string), '')"
+
+
+def _is_missing(x: str) -> str:
     """Missing = NULL or empty string after trim (the reference's CSV
     carries missing values as ``""``; parse failures count as missing,
     ``Compare.scala:48-60``)."""
-    return c.isNull() | (F.trim(c.cast("string")) == "")
+    return f"({x} IS NULL OR trim(cast({x} as string)) = '')"
 
 
-def levenshtein_sim(a: Column | str, b: Column | str) -> Column:
-    """Normalized Levenshtein similarity in [0,1] (G1)."""
-    a, b = _as_col(a).cast("string"), _as_col(b).cast("string")
-    a, b = F.coalesce(a, F.lit("")), F.coalesce(b, F.lit(""))
+def _missing_ladder(a: str, b: str, value: str, mode: str) -> str:
+    """``value`` behind the missing-value ladder: both missing → 1.0,
+    one missing → the sentinel (NULL in ``mode="sane"``)."""
+    one_missing = "CAST(NULL AS DOUBLE)" if mode == "sane" else repr(DOUBLE_MAX_SENTINEL) + "D"
+    ma, mb = _is_missing(a), _is_missing(b)
     return (
-        F.lit(1.0)
-        - F.levenshtein(a, b).cast("double")
-        / F.greatest(F.length(a), F.length(b), F.lit(1)).cast("double")
+        f"CASE WHEN {ma} AND {mb} THEN 1.0D WHEN {ma} OR {mb} THEN {one_missing}"
+        f" ELSE {value} END"
     )
 
 
-def _missing_ladder(a: Column, b: Column, value: Column, mode: str) -> Column:
-    both = _is_missing(a) & _is_missing(b)
-    either = _is_missing(a) | _is_missing(b)
-    one_missing = (
-        F.lit(None).cast("double") if mode == "sane" else F.lit(DOUBLE_MAX_SENTINEL)
+# The comparators as SQL text over two SQL expressions (quoted column
+# names): their one definition. ``1.0D`` is a DOUBLE literal; a bare
+# ``1.0`` would be DECIMAL.
+
+
+def levenshtein_sql(a: str, b: str) -> str:
+    """Normalized Levenshtein similarity in [0,1] (G1)."""
+    a, b = _text(a), _text(b)
+    return (
+        f"1.0D - cast(levenshtein({a}, {b}) as double)"
+        f" / cast(greatest(length({a}), length({b}), 1) as double)"
     )
-    return F.when(both, F.lit(1.0)).when(either, one_missing).otherwise(value)
 
 
-def abs_diff(a: Column | str, b: Column | str, mode: str = "parity") -> Column:
+def abs_diff_sql(a: str, b: str, mode: str = "parity") -> str:
     """``abs(a-b)`` with the reference's missing-value ladder (G2)."""
-    a, b = _as_col(a), _as_col(b)
-    val = F.abs(a.cast("double") - b.cast("double"))
-    return _missing_ladder(a, b, val, mode)
+    return _missing_ladder(a, b, f"abs(cast({a} as double) - cast({b} as double))", mode)
 
 
-def sqrt_diff(a: Column | str, b: Column | str, mode: str = "parity") -> Column:
+def sqrt_diff_sql(a: str, b: str, mode: str = "parity") -> str:
     """``sqrt(abs(a-b))`` with the missing-value ladder (G2)."""
-    a, b = _as_col(a), _as_col(b)
-    val = F.sqrt(F.abs(a.cast("double") - b.cast("double")))
-    return _missing_ladder(a, b, val, mode)
+    return _missing_ladder(a, b, f"sqrt(abs(cast({a} as double) - cast({b} as double)))", mode)
 
 
-def exact_match(a: Column | str, b: Column | str) -> Column:
+def exact_sql(a: str, b: str) -> str:
     """1.0 if equal (null-safe), else 0.0."""
-    return _as_col(a).eqNullSafe(_as_col(b)).cast("double")
+    return f"cast({a} <=> {b} as double)"
 
 
-def jaccard_tokens(a: Column | str, b: Column | str) -> Column:
+def jaccard_tokens_sql(a: str, b: str) -> str:
     """Jaccard similarity of whitespace token sets."""
-    ta = F.array_distinct(F.split(F.coalesce(_as_col(a).cast("string"), F.lit("")), r"\s+"))
-    tb = F.array_distinct(F.split(F.coalesce(_as_col(b).cast("string"), F.lit("")), r"\s+"))
+    ta, tb = (rf"array_distinct(split({_text(x)}, '\\s+'))" for x in (a, b))
     # distinct-element inputs ⇒ |ta ∪ tb| = |ta| + |tb| − |ta ∩ tb|:
     # skips the second non-codegen hash-set build per pair (the
     # textdedup._jaccard treatment); same integers, same quotient,
     # bit-identical.
-    inter = F.size(F.array_intersect(ta, tb))
-    union = (F.size(ta) + F.size(tb) - inter).cast("double")
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter.cast("double") / union)
+    inter = f"size(array_intersect({ta}, {tb}))"
+    union = f"cast(size({ta}) + size({tb}) - {inter} as double)"
+    return f"CASE WHEN {union} = 0 THEN 1.0D ELSE cast({inter} as double) / {union} END"
+
+
+def ignore_sql(a: str, b: str) -> str:
+    """Arity-stable 0.0 placeholder (``Compare.scala:73-77``)."""
+    return "0.0D"
+
+
+# The same comparators as Columns over column names or F.col references.
+
+
+def levenshtein_sim(a: Column | str, b: Column | str) -> Column:
+    return F.expr(levenshtein_sql(col_sql(a), col_sql(b)))
+
+
+def abs_diff(a: Column | str, b: Column | str, mode: str = "parity") -> Column:
+    return F.expr(abs_diff_sql(col_sql(a), col_sql(b), mode))
+
+
+def sqrt_diff(a: Column | str, b: Column | str, mode: str = "parity") -> Column:
+    return F.expr(sqrt_diff_sql(col_sql(a), col_sql(b), mode))
+
+
+def exact_match(a: Column | str, b: Column | str) -> Column:
+    return F.expr(exact_sql(col_sql(a), col_sql(b)))
+
+
+def jaccard_tokens(a: Column | str, b: Column | str) -> Column:
+    return F.expr(jaccard_tokens_sql(col_sql(a), col_sql(b)))
 
 
 def ignore(a: Column | str, b: Column | str) -> Column:
-    """Arity-stable 0.0 placeholder (``Compare.scala:73-77``)."""
-    return F.lit(0.0)
-
+    return F.expr(ignore_sql(col_sql(a), col_sql(b)))
 
 
 def _jw_one(a: str, b: str) -> float:
@@ -283,7 +321,17 @@ def jaro_winkler(a: Column | str, b: Column | str) -> Column:
         _as_col(a).cast("string"), _as_col(b).cast("string")
     )
 
-# Registry consumed by ComparatorSpec (operators/dedup/compare.py).
+# Registries consumed by FieldComparator (operators/dedup/compare.py):
+# every named comparator as a Column function, and those that are SQL
+# text as their text builder.
+SQL_COMPARATORS = {
+    "levenshtein": levenshtein_sql,
+    "abs_diff": abs_diff_sql,
+    "sqrt_diff": sqrt_diff_sql,
+    "exact": exact_sql,
+    "jaccard_tokens": jaccard_tokens_sql,
+    "ignore": ignore_sql,
+}
 COMPARATORS = {
     "levenshtein": levenshtein_sim,
     "abs_diff": abs_diff,

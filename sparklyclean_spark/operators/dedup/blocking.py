@@ -16,6 +16,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparklyclean_spark.functions.sqltext import ident
+
+
 @dataclass(frozen=True)
 class BlockingRule:
     """One blocking function: ``priority`` (the BKV ``k``) and a key
@@ -53,26 +56,18 @@ def explode_blocks(df: DataFrame, rules: list[BlockingRule]) -> DataFrame:
     """One output row per (record, blocking function): adds the scalar
     ``_bv<k>`` columns (for the exactly-once guard) plus exploded
     ``bk``/``bv``."""
-    return (
-        with_block_value_columns(df, rules)
-        .withColumn(
-            "_bkv",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(r.priority).cast("int").alias("k"),
-                            F.col(bv_col(r.priority)).alias("v"),
-                        )
-                        for r in sorted(rules, key=lambda r: r.priority)
-                    ]
-                )
-            ),
-        )
-        .withColumn("bk", F.col("_bkv.k"))
-        .withColumn("bv", F.col("_bkv.v"))
-        .drop("_bkv")
+    return _explode(df, rules, ["*"])
+
+
+def _explode(df: DataFrame, rules: list[BlockingRule], keep: list[str]) -> DataFrame:
+    """``keep`` (SQL text) plus ``bk``/``bv``, one row per (record,
+    blocking function): the ``_bv<k>`` columns, then ONE projection
+    that inlines an array of (bk, bv) structs over them."""
+    blocks = ", ".join(
+        f"named_struct('bk', {r.priority}, 'bv', {ident(bv_col(r.priority))})"
+        for r in sorted(rules, key=lambda r: r.priority)
     )
+    return with_block_value_columns(df, rules).selectExpr(*keep, f"inline(array({blocks}))")
 
 
 def blocked_rows(
@@ -96,10 +91,9 @@ def blocked_rows(
     guard is a no-op on a scan already >= ``min_splits`` splits, where
     an unconditional repartition would shuffle a 100 TB table and cap
     its parallelism (r7 VERDICT finding 3: the probe is deliberate)."""
-    bv_cols = [bv_col(r.priority) for r in rules]
-    base = explode_blocks(df, rules).select(
-        F.col(id_col).alias("id_"), *payload_cols, *bv_cols, "bk", "bv"
-    )
+    keep = [f"{ident(id_col)} AS id_"]
+    keep += [ident(c) for c in payload_cols + [bv_col(r.priority) for r in rules]]
+    base = _explode(df, rules, keep)
     if base.rdd.getNumPartitions() < min_splits:
         base = base.repartition(min_splits)
     return base
@@ -112,30 +106,32 @@ def bv_col(priority: int) -> str:
 
 def with_block_value_columns(df: DataFrame, rules: list[BlockingRule]) -> DataFrame:
     """One scalar string column per blocking rule (``_bv<k>``) — the
-    codegen-friendly representation the pair guards use."""
-    for r in rules:
-        df = df.withColumn(bv_col(r.priority), r.value())
-    return df
+    codegen-friendly representation the pair guards use. A rule's key
+    may be any Column, so this projection is built from Columns."""
+    return df.withColumns({bv_col(r.priority): r.value() for r in rules})
 
 
 _NO_COMMON = 1 << 30
 
 
+def lowest_common_block_sql(
+    rules: list[BlockingRule], t1: str = "t1_", t2: str = "t2_"
+) -> str:
+    """Smallest blocking-function number under which two records
+    co-block — the pair is compared only there (``Util.scala:70-83``,
+    ``Compare.scala:94,106``), as SQL text. Unrolled over the
+    ``_bv<k>`` columns of both sides: LEAST over rules of (k if values
+    equal else sentinel). Plain CASE/least — stays inside whole-stage
+    codegen (an array_intersect/transform form costs ~0.1 ms/pair
+    interpreted, which dominates pair generation)."""
+    no_common = _NO_COMMON
+    sides = [(ident(t1 + bv_col(r.priority)), ident(t2 + bv_col(r.priority)), r.priority) for r in rules]
+    terms = [f"CASE WHEN {x} = {y} THEN {k} ELSE {no_common} END" for x, y, k in sides]
+    return terms[0] if len(terms) == 1 else f"least({', '.join(terms)})"
+
+
 def lowest_common_block_scalar(
     rules: list[BlockingRule], t1: str = "t1_", t2: str = "t2_"
 ) -> Column:
-    """Smallest blocking-function number under which two records
-    co-block — the pair is compared only there (``Util.scala:70-83``,
-    ``Compare.scala:94,106``). Unrolled over the ``_bv<k>`` columns of
-    both sides: LEAST over rules of (k if values equal else sentinel).
-    Plain when/least — stays inside whole-stage codegen (an
-    array_intersect/transform form costs ~0.1 ms/pair interpreted,
-    which dominates pair generation)."""
-    terms = [
-        F.when(
-            F.col(f"{t1}{bv_col(r.priority)}") == F.col(f"{t2}{bv_col(r.priority)}"),
-            F.lit(r.priority),
-        ).otherwise(F.lit(_NO_COMMON))
-        for r in rules
-    ]
-    return terms[0] if len(terms) == 1 else F.least(*terms)
+    """``lowest_common_block_sql`` as a Column."""
+    return F.expr(lowest_common_block_sql(rules, t1, t2))

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparklyclean_spark.cache import tracked_checkpoint, tracked_persist
+from sparklyclean_spark.observe import observed
 
 
 def connected_components(
@@ -71,7 +72,7 @@ def connected_components(
         vertices.select(F.col(id_col).alias("v"), F.col(id_col).alias("comp"))
         .observe(obs0, _witness)
     )
-    prev_sum = obs0.get["s"]
+    prev_sum = observed(obs0, "connected_components")["s"]
     n_rounds = 0
     for _ in range(max_iter):
         n_rounds += 1
@@ -90,7 +91,7 @@ def connected_components(
             .observe(obs, _witness),
             replaces=labels,
         )
-        cur_sum = obs.get["s"]
+        cur_sum = observed(obs, "connected_components")["s"]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -176,7 +177,7 @@ def connected_components_star(
             ),
             replaces=e,
         )
-        m = obs.get
+        m = observed(obs, "connected_components_star")
         cur_w = (m["n"], m["s"])
         e = e3
         if cur_w == prev_w:

@@ -2,11 +2,14 @@
 
 The reference hardcodes a per-column comparator list
 (``Compare.scala:35-37``); here it is a pluggable spec. Features are
-built as Column expressions over a pairs DataFrame carrying
-``t1_<col>`` / ``t2_<col>`` payloads, so the whole feature stage is
-JVM-side codegen — at 100 TB there is no Python in the per-pair loop.
-A custom Python comparator can still be injected as a pandas UDF by
-passing a callable producing a Column.
+built over a pairs DataFrame carrying ``t1_<col>`` / ``t2_<col>``
+payloads, so the whole feature stage is JVM-side codegen — at 100 TB
+there is no Python in the per-pair loop. A named comparator gets the
+two payload column NAMES and is one ``F.expr`` of SQL text
+(``functions/similarity.py``), so a 12-comparator spec costs tens of
+py4j round trips to build, not thousands. A custom comparator (a
+callable producing a Column, e.g. a pandas UDF) still gets the two
+payload Columns.
 """
 
 from __future__ import annotations
@@ -16,7 +19,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sparklyclean_spark.functions.similarity import COMPARATORS
+from sparklyclean_spark.functions.similarity import COMPARATORS, SQL_COMPARATORS
+from sparklyclean_spark.functions.sqltext import ident
 
 
 @dataclass(frozen=True)
@@ -28,21 +32,28 @@ class FieldComparator:
     comparator: str | object = "levenshtein"
     kwargs: dict = field(default_factory=dict)
 
-    def build(self, a: Column, b: Column) -> Column:
-        fn = (
-            COMPARATORS[self.comparator]
-            if isinstance(self.comparator, str)
-            else self.comparator
-        )
-        return fn(a, b, **self.kwargs)
+    def build(self, a: Column | str, b: Column | str) -> Column:
+        if isinstance(self.comparator, str):
+            return COMPARATORS[self.comparator](a, b, **self.kwargs)
+        a, b = (F.col(c) if isinstance(c, str) else c for c in (a, b))
+        return self.comparator(a, b, **self.kwargs)
+
+    def sql(self, a: str, b: str) -> str | None:
+        """SQL text over the columns named ``a`` and ``b``, or None for
+        a Column-valued comparator (``jaro_winkler``, a callable)."""
+        if isinstance(self.comparator, str) and self.comparator in SQL_COMPARATORS:
+            return SQL_COMPARATORS[self.comparator](ident(a), ident(b), **self.kwargs)
+        return None
 
 
 def feature_columns(spec: list[FieldComparator], t1: str = "t1_", t2: str = "t2_") -> list[Column]:
     """One aliased feature Column per comparator: ``f_<col>``."""
-    return [
-        fc.build(F.col(f"{t1}{fc.col}"), F.col(f"{t2}{fc.col}")).alias(f"f_{fc.col}")
-        for fc in spec
-    ]
+    out = []
+    for fc in spec:
+        a, b, name = f"{t1}{fc.col}", f"{t2}{fc.col}", f"f_{fc.col}"
+        text = fc.sql(a, b)
+        out.append(F.expr(f"{text} AS {ident(name)}") if text else fc.build(a, b).alias(name))
+    return out
 
 
 def with_features(
@@ -52,14 +63,16 @@ def with_features(
 ) -> DataFrame:
     """Append features to a pairs DataFrame (``t1_*``/``t2_*`` payload
     columns). ``as_array=True`` adds ``features array<double>`` (the
-    reference's labeled-point layout, ``DisDedupReducer.scala:5``);
-    otherwise one ``f_<col>`` column per comparator."""
-    cols = feature_columns(spec)
-    if as_array:
-        return pairs.withColumn(
-            "features", F.array(*[c.cast("double") for c in cols])
-        )
-    return pairs.select("*", *cols)
+    reference's labeled-point layout, ``DisDedupReducer.scala:5``):
+    one ``F.expr`` when every comparator is SQL text, else an array of
+    Columns; otherwise one ``f_<col>`` column per comparator."""
+    if not as_array:
+        return pairs.select("*", *feature_columns(spec))
+    texts = [fc.sql(f"t1_{fc.col}", f"t2_{fc.col}") for fc in spec]
+    if all(texts):
+        feats = ", ".join(f"cast({t} as double)" for t in texts)
+        return pairs.withColumn("features", F.expr(f"array({feats})"))
+    return pairs.withColumn("features", F.array(*[c.cast("double") for c in feature_columns(spec)]))
 
 
 def select_pair_features(

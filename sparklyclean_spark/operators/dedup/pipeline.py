@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparklyclean_spark.functions.sqltext import col_sql
 from sparklyclean_spark.operators.dedup.blocking import BlockingRule
 from sparklyclean_spark.operators.dedup.compare import FieldComparator, with_features
 from sparklyclean_spark.operators.dedup.disdedup import DEFAULT_SEED, candidate_pairs_disdedup
@@ -42,10 +43,13 @@ FEBRL_SPEC = [
 FEBRL_FEATURE_NAMES = [f"f_{fc.col}" for fc in FEBRL_SPEC]
 
 
-def febrl_label(id1: Column, id2: Column) -> Column:
+def febrl_label(id1: Column | str, id2: Column | str) -> Column:
     """Ground truth from Febrl ids: duplicate iff the <N> of
-    ``rec-<N>-...`` matches (``Util.scala:26-43``)."""
-    return (F.split(id1, "-")[1] == F.split(id2, "-")[1]).cast("double")
+    ``rec-<N>-...`` matches (``Util.scala:26-43``). ``[1]`` is the
+    0-based second part."""
+    return F.expr(
+        f"cast(split({col_sql(id1)}, '-')[1] = split({col_sql(id2)}, '-')[1] as double)"
+    )
 
 
 def generate_labeled_points(
@@ -62,7 +66,9 @@ def generate_labeled_points(
 
     The reference's program 1 (``GenerateLabeledPoints.scala``) minus
     the text sink: pair generation is the load-balanced Dis-Dedup
-    operator; features are Column expressions (JVM-side).
+    operator; features are comparator expressions built from SQL text
+    (JVM-side), and the label and the sane-mode NULL→0.0 are one
+    projection.
     ``mode="sane"`` switches the numeric comparators' one-side-missing
     sentinel from Double.MaxValue to NULL→0.0 imputation.
     """
@@ -80,12 +86,7 @@ def generate_labeled_points(
         people, rules, id_col, payload_cols=payload, k=k, seed=seed
     )
     feat = with_features(pairs, spec, as_array=True)
-    if mode == "sane":
-        # NULL features (one-side-missing) → 0.0 for ML friendliness.
-        feat = feat.withColumn(
-            "features", F.transform("features", lambda x: F.coalesce(x, F.lit(0.0)))
-        )
-    cols = [F.col("id1"), F.col("id2")]
-    if labeled:
-        cols.append(febrl_label(F.col("id1"), F.col("id2")).alias("label"))
-    return feat.select(*cols, "features")
+    # NULL features (one-side-missing) → 0.0 for ML friendliness.
+    features = "transform(features, x -> coalesce(x, 0.0D))" if mode == "sane" else "features"
+    label = [febrl_label("id1", "id2").alias("label")] if labeled else []
+    return feat.select("id1", "id2", *label, F.expr(f"{features} AS features"))

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparklyclean_spark.functions.sqltext import ident
+
 # The 14-column Febrl dedup schema (reference README.md:163-180).
 # Numeric-ish columns stay STRING at the scan: the Febrl generator
 # injects typos into every field, so "19o20707" must survive the scan
@@ -50,9 +52,9 @@ def read_csv(
     """CSV scan with an explicit schema (reference S1, done right).
 
     ``trim_fields=True`` strips surrounding whitespace from every
-    string column — Febrl pads fields with leading spaces and the
-    reference keeps the padding (``Util.scala:14-18`` splits without
-    trimming), so parity mode is ``False``.
+    string column, in one projection — Febrl pads fields with leading
+    spaces and the reference keeps the padding (``Util.scala:14-18``
+    splits without trimming), so parity mode is ``False``.
     """
     reader = spark.read.option("header", str(header).lower())
     if schema is not None:
@@ -60,9 +62,11 @@ def read_csv(
     else:
         df = reader.option("inferSchema", "true").csv(path)
     if trim_fields:
-        for f in df.schema.fields:
-            if isinstance(f.dataType, T.StringType):
-                df = df.withColumn(f.name, F.trim(F.col(f.name)))
+        df = df.selectExpr(*[
+            f"trim({ident(f.name)}) AS {ident(f.name)}"
+            if isinstance(f.dataType, T.StringType) else ident(f.name)
+            for f in (schema or df.schema).fields
+        ])
     return df
 
 

@@ -61,19 +61,9 @@ def write_labeled_points(df: DataFrame, path: str) -> None:
     SKIPS null elements without a replacement, which silently shifted
     every later feature one slot left on disk — r9 review finding;
     ``NaN`` round-trips to a NaN double on re-read, keeping slots
-    aligned)."""
-    feats = F.array_join(
-        F.transform(F.col("features"), lambda x: x.cast("string")),
-        ", ",
-        "NaN",
-    )
+    aligned). The line is one SQL-text projection."""
     # labels are 0/1 doubles in-memory but "0"/"1" on disk (README.md:122-126)
-    label = (
-        F.coalesce(F.col("label").cast("int").cast("string"), F.lit(""))
-        if "label" in df.columns
-        else F.lit("")
-    )
-    lines = df.select(
-        F.concat_ws(", ", F.col("id1"), F.col("id2"), label, feats).alias("value")
-    )
+    label = "coalesce(cast(cast(label as int) as string), '')" if "label" in df.columns else "''"
+    feats = "array_join(transform(features, x -> cast(x as string)), ', ', 'NaN')"
+    lines = df.selectExpr(f"concat_ws(', ', id1, id2, {label}, {feats}) AS value")
     lines.write.mode("overwrite").text(path)

@@ -4,7 +4,10 @@ naive differential equality, bounded per-reducer workload.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import math
+import os
 import re
 import time
 
@@ -19,6 +22,7 @@ def _timed(fn) -> float:
 from pyspark.sql import functions as F
 
 from sparklyclean_spark import plans as P
+from sparklyclean_spark.cache import release_caches
 from sparklyclean_spark.operators.dedup.blocking import BlockingRule, blocked_rows, explode_blocks
 from sparklyclean_spark.operators.dedup.pairs import candidate_pairs_naive
 from sparklyclean_spark.operators.dedup.disdedup import (
@@ -390,3 +394,149 @@ def test_jaro_winkler_batch_bit_exact_and_faster():
     print(f"jw microbench: batch {t_batch:.4f}s scalar {t_scalar:.4f}s "
           f"({t_scalar / max(t_batch, 1e-9):.1f}x)")
     assert t_batch < t_scalar * 1.5
+
+
+# Per named comparator: its feature values on the rows of
+# _COMPARATOR_ROWS (ordered by id1), pinned from the Column-API
+# comparators the SQL text replaced. Rows 2-3 are both-missing (NULL,
+# blank), rows 4-5 one-missing.
+_COMPARATOR_ROWS = [
+    (1, 2, "john smith", "john  smith", "12", "15"),
+    (2, 3, None, None, None, None),
+    (3, 4, "", "  ", "", " "),
+    (4, 5, "abc", None, "7", None),
+    (5, 6, None, "x y z", "", "3.5"),
+    (6, 7, "a b a", "b a", "19200101", "19200107"),
+    (7, 8, "same", "same", "-2", "2"),
+]
+_MAX = 1.7976931348623157e308
+_COMPARATOR_VALUES = {
+    ("s", "levenshtein", ()): [0.9090909090909091, 1.0, 0.0, 0.0, 0.0, 0.6, 1.0],
+    ("s", "exact", ()): [0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 1.0],
+    ("s", "jaccard_tokens", ()): [1.0, 1.0, 1.0, 0.0, 0.0, 1.0, 1.0],
+    ("s", "ignore", ()): [0.0] * 7,
+    ("n", "abs_diff", ()): [3.0, 1.0, 1.0, _MAX, _MAX, 6.0, 4.0],
+    ("n", "abs_diff", ("sane",)): [3.0, 1.0, 1.0, None, None, 6.0, 4.0],
+    ("n", "sqrt_diff", ()): [
+        1.7320508075688772, 1.0, 1.0, _MAX, _MAX, 2.449489742783178, 2.0],
+    ("n", "sqrt_diff", ("sane",)): [
+        1.7320508075688772, 1.0, 1.0, None, None, 2.449489742783178, 2.0],
+}
+
+
+@pytest.mark.parametrize("col,name,mode", list(_COMPARATOR_VALUES))
+def test_named_comparator_values(spark, col, name, mode):
+    """Every named SQL-text comparator gives the pinned values, in both
+    ladder modes; the Column functions take ``F.col`` references as
+    well as names, and refuse a computed Column."""
+    from sparklyclean_spark.functions.similarity import COMPARATORS
+    from sparklyclean_spark.operators.dedup.compare import (
+        FieldComparator,
+        select_pair_features,
+    )
+
+    pairs = spark.createDataFrame(
+        _COMPARATOR_ROWS,
+        "id1 int, id2 int, t1_s string, t2_s string, t1_n string, t2_n string",
+    )
+    kwargs = {"mode": mode[0]} if mode else {}
+    want = _COMPARATOR_VALUES[(col, name, mode)]
+    feats = select_pair_features(pairs, [FieldComparator(col, name, kwargs)])
+    assert [r[2] for r in feats.orderBy("id1").collect()] == want
+    fn = COMPARATORS[name]
+    by_ref = pairs.select(fn(F.col(f"t1_{col}"), F.col(f"t2_{col}"), **kwargs))
+    assert [r[0] for r in by_ref.collect()] == want  # createDataFrame keeps row order
+    with pytest.raises(TypeError, match="F.col"):
+        fn(F.upper(f"t1_{col}"), f"t2_{col}", **kwargs)
+
+
+# Per (k, mode): (lines, sha256 of the sorted lines) of program 1's
+# text output on the skewed fixture, pinned from the Column-API build.
+_PROGRAM1_LINES = {
+    (3, "parity"): (48095, "ede415455c604f6a187e8032ad457f8e61427f1c9e9190264ad459f67f80c421"),
+    (49, "sane"): (48095, "efe38bd9ccd3fc3909399a0e37daf97cc52164ad3d7ead38e41edf22fb996212"),
+}
+
+
+def _text_lines(path: str) -> list[str]:
+    lines = []
+    for part in glob.glob(os.path.join(path, "part-*")):
+        with open(part) as f:
+            lines += f.read().splitlines()
+    return lines
+
+
+@pytest.mark.parametrize("k,mode", list(_PROGRAM1_LINES))
+def test_program1_lines_match_pinned(skewed_people, tmp_path, k, mode):
+    """generate_labeled_points -> write_labeled_points writes the same
+    bytes, line for line, as the Column-API build did."""
+    from sparklyclean_spark.operators.dedup.pipeline import generate_labeled_points
+    from sparklyclean_spark.sources.points import write_labeled_points
+
+    out = str(tmp_path / "points")
+    write_labeled_points(generate_labeled_points(skewed_people, k=k, mode=mode), out)
+    lines = sorted(_text_lines(out))
+    digest = hashlib.sha256("\n".join(lines).encode()).hexdigest()
+    assert (len(lines), digest) == _PROGRAM1_LINES[(k, mode)]
+
+
+def test_program1_construction_budget(spark, people, tmp_path, monkeypatch):
+    """Program 1 (read_febrl -> generate_labeled_points(k=49, sane) ->
+    write_labeled_points), planning query and write included, makes at
+    most 1,000 Python->JVM round trips. Built from Column calls it made
+    about 7,000; built from SQL text, about 550."""
+    from py4j.java_gateway import GatewayClient
+
+    from sparklyclean_spark.operators.dedup.pipeline import generate_labeled_points
+    from sparklyclean_spark.sources.csv import read_febrl
+    from sparklyclean_spark.sources.points import write_labeled_points
+
+    csv = str(tmp_path / "people.csv")
+    people.write.csv(csv, header=True)
+
+    def program1() -> None:
+        points = generate_labeled_points(read_febrl(spark, csv), k=49, mode="sane")
+        write_labeled_points(points, str(tmp_path / "points"))
+        release_caches()
+
+    program1()  # warm: first-use class lookups are not construction
+    sent = [0]
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    program1()
+    monkeypatch.undo()
+    assert 0 < sent[0] <= 1000, f"{sent[0]} py4j round trips"
+
+
+def test_observed_reads_metrics_without_a_job(spark):
+    from pyspark.sql import Observation
+
+    from sparklyclean_spark.observe import observed
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    obs = Observation()
+    spark.range(5).observe(obs, F.expr("count(1) AS n")).collect()
+    before = store.executionsCount()
+    assert observed(obs, "probe") == {"n": 5}
+    assert store.executionsCount() == before
+
+
+def test_observed_raises_when_never_acted_on(spark, monkeypatch):
+    """An observed DataFrame that no action runs makes the bounded read
+    raise, naming the operator, instead of hanging the driver."""
+    from pyspark.sql import Observation
+
+    from sparklyclean_spark import observe
+
+    monkeypatch.setattr(observe, "OBSERVE_TIMEOUT_S", 0.5)
+    obs = Observation()
+    spark.range(5).observe(obs, F.expr("count(1) AS n"))  # no action
+    t0 = time.perf_counter()
+    with pytest.raises(TimeoutError, match="disdedup.block_stats"):
+        observe.observed(obs, "disdedup.block_stats")
+    assert time.perf_counter() - t0 < 30
