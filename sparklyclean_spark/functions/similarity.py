@@ -3,12 +3,18 @@
 Re-expresses the reference's scalar comparison functions
 (``Compare.scala:14-81`` in david-siqi-liu/sparklyclean) as Spark
 expressions so feature generation runs inside whole-stage codegen — no
-Python in the per-pair hot path. Each comparator is one definition in
-SQL text over backtick-quoted column names, made into a Column by one
-``F.expr`` (``functions/sqltext.py``; built from Column calls, a
-comparator cost tens of py4j round trips). Arguments are column
-names or plain ``F.col`` references. ``jaro_winkler`` is the
-exception: a pandas UDF over any Columns.
+Python in the per-pair hot path. Each comparator is SQL text over
+backtick-quoted column names, made into a Column by one ``F.expr``
+(``functions/sqltext.py``; built from Column calls, a comparator cost
+tens of py4j round trips). ``jaro_winkler`` is the exception: a
+pandas UDF.
+
+Arguments: a column name, or an ``F.col(name)`` reference. A computed
+Column (``F.upper(c)``, ``c.cast(...)``) or a DataFrame-bound one
+(``df["x"]``) has no column name to splice into the text and raises
+``TypeError``: project it to a named column first. (Built from Column
+calls, the comparators took any Column; ``jaro_winkler`` and
+``ignore`` still do.)
 
 Semantics preserved from the reference (SURVEY.md §2.6, §2.9):
 
@@ -50,88 +56,61 @@ def _is_missing(x: str) -> str:
     return f"({x} IS NULL OR trim(cast({x} as string)) = '')"
 
 
-def _missing_ladder(a: str, b: str, value: str, mode: str) -> str:
+def _missing_ladder(a: str, b: str, value: str, mode: str) -> Column:
     """``value`` behind the missing-value ladder: both missing → 1.0,
     one missing → the sentinel (NULL in ``mode="sane"``)."""
     one_missing = "CAST(NULL AS DOUBLE)" if mode == "sane" else repr(DOUBLE_MAX_SENTINEL) + "D"
     ma, mb = _is_missing(a), _is_missing(b)
-    return (
+    return F.expr(
         f"CASE WHEN {ma} AND {mb} THEN 1.0D WHEN {ma} OR {mb} THEN {one_missing}"
         f" ELSE {value} END"
     )
 
 
-# The comparators as SQL text over two SQL expressions (quoted column
-# names): their one definition. ``1.0D`` is a DOUBLE literal; a bare
-# ``1.0`` would be DECIMAL.
+# ``1.0D`` is a DOUBLE literal; a bare ``1.0`` would be DECIMAL.
 
 
-def levenshtein_sql(a: str, b: str) -> str:
+def levenshtein_sim(a: Column | str, b: Column | str) -> Column:
     """Normalized Levenshtein similarity in [0,1] (G1)."""
-    a, b = _text(a), _text(b)
-    return (
+    a, b = _text(col_sql(a)), _text(col_sql(b))
+    return F.expr(
         f"1.0D - cast(levenshtein({a}, {b}) as double)"
         f" / cast(greatest(length({a}), length({b}), 1) as double)"
     )
 
 
-def abs_diff_sql(a: str, b: str, mode: str = "parity") -> str:
+def abs_diff(a: Column | str, b: Column | str, mode: str = "parity") -> Column:
     """``abs(a-b)`` with the reference's missing-value ladder (G2)."""
+    a, b = col_sql(a), col_sql(b)
     return _missing_ladder(a, b, f"abs(cast({a} as double) - cast({b} as double))", mode)
 
 
-def sqrt_diff_sql(a: str, b: str, mode: str = "parity") -> str:
+def sqrt_diff(a: Column | str, b: Column | str, mode: str = "parity") -> Column:
     """``sqrt(abs(a-b))`` with the missing-value ladder (G2)."""
+    a, b = col_sql(a), col_sql(b)
     return _missing_ladder(a, b, f"sqrt(abs(cast({a} as double) - cast({b} as double)))", mode)
 
 
-def exact_sql(a: str, b: str) -> str:
+def exact_match(a: Column | str, b: Column | str) -> Column:
     """1.0 if equal (null-safe), else 0.0."""
-    return f"cast({a} <=> {b} as double)"
+    return F.expr(f"cast({col_sql(a)} <=> {col_sql(b)} as double)")
 
 
-def jaccard_tokens_sql(a: str, b: str) -> str:
+def jaccard_tokens(a: Column | str, b: Column | str) -> Column:
     """Jaccard similarity of whitespace token sets."""
-    ta, tb = (rf"array_distinct(split({_text(x)}, '\\s+'))" for x in (a, b))
+    ta, tb = (rf"array_distinct(split({_text(col_sql(x))}, '\\s+'))" for x in (a, b))
     # distinct-element inputs ⇒ |ta ∪ tb| = |ta| + |tb| − |ta ∩ tb|:
     # skips the second non-codegen hash-set build per pair (the
     # textdedup._jaccard treatment); same integers, same quotient,
     # bit-identical.
     inter = f"size(array_intersect({ta}, {tb}))"
     union = f"cast(size({ta}) + size({tb}) - {inter} as double)"
-    return f"CASE WHEN {union} = 0 THEN 1.0D ELSE cast({inter} as double) / {union} END"
-
-
-def ignore_sql(a: str, b: str) -> str:
-    """Arity-stable 0.0 placeholder (``Compare.scala:73-77``)."""
-    return "0.0D"
-
-
-# The same comparators as Columns over column names or F.col references.
-
-
-def levenshtein_sim(a: Column | str, b: Column | str) -> Column:
-    return F.expr(levenshtein_sql(col_sql(a), col_sql(b)))
-
-
-def abs_diff(a: Column | str, b: Column | str, mode: str = "parity") -> Column:
-    return F.expr(abs_diff_sql(col_sql(a), col_sql(b), mode))
-
-
-def sqrt_diff(a: Column | str, b: Column | str, mode: str = "parity") -> Column:
-    return F.expr(sqrt_diff_sql(col_sql(a), col_sql(b), mode))
-
-
-def exact_match(a: Column | str, b: Column | str) -> Column:
-    return F.expr(exact_sql(col_sql(a), col_sql(b)))
-
-
-def jaccard_tokens(a: Column | str, b: Column | str) -> Column:
-    return F.expr(jaccard_tokens_sql(col_sql(a), col_sql(b)))
+    return F.expr(f"CASE WHEN {union} = 0 THEN 1.0D ELSE cast({inter} as double) / {union} END")
 
 
 def ignore(a: Column | str, b: Column | str) -> Column:
-    return F.expr(ignore_sql(col_sql(a), col_sql(b)))
+    """Arity-stable 0.0 placeholder (``Compare.scala:73-77``)."""
+    return F.expr("0.0D")
 
 
 def _jw_one(a: str, b: str) -> float:
@@ -321,17 +300,7 @@ def jaro_winkler(a: Column | str, b: Column | str) -> Column:
         _as_col(a).cast("string"), _as_col(b).cast("string")
     )
 
-# Registries consumed by FieldComparator (operators/dedup/compare.py):
-# every named comparator as a Column function, and those that are SQL
-# text as their text builder.
-SQL_COMPARATORS = {
-    "levenshtein": levenshtein_sql,
-    "abs_diff": abs_diff_sql,
-    "sqrt_diff": sqrt_diff_sql,
-    "exact": exact_sql,
-    "jaccard_tokens": jaccard_tokens_sql,
-    "ignore": ignore_sql,
-}
+# Registry consumed by FieldComparator (operators/dedup/compare.py).
 COMPARATORS = {
     "levenshtein": levenshtein_sim,
     "abs_diff": abs_diff,

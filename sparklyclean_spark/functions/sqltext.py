@@ -21,12 +21,17 @@ def ident(name: str) -> str:
 
 def col_sql(c: Column | str) -> str:
     """A column reference as SQL text: a name, or a plain ``F.col``
-    reference (its name parts, each quoted). Any other Column has no
-    SQL text to splice in, so it is refused."""
+    reference (its name parts, each quoted). Any other Column is
+    refused: a computed one has no name to splice in, and a
+    DataFrame-bound one (``df["x"]``, which carries the id of its
+    plan) would lose that binding as text and could resolve to the
+    other side of a self-join."""
     if isinstance(c, str):
         return ident(c)
     try:
-        parts = c._jc.node().nameParts().mkString("\0").split("\0")
+        node = c._jc.node()
+        if not node.planId().isDefined():
+            return ".".join(ident(p) for p in node.nameParts().mkString("\0").split("\0"))
     except Py4JError:
-        raise TypeError(f"expected a column name or F.col(name), got {c}") from None
-    return ".".join(ident(p) for p in parts)
+        pass
+    raise TypeError(f"expected a column name or F.col(name), got {c}")

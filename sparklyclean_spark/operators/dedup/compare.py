@@ -6,10 +6,10 @@ built over a pairs DataFrame carrying ``t1_<col>`` / ``t2_<col>``
 payloads, so the whole feature stage is JVM-side codegen — at 100 TB
 there is no Python in the per-pair loop. A named comparator gets the
 two payload column NAMES and is one ``F.expr`` of SQL text
-(``functions/similarity.py``), so a 12-comparator spec costs tens of
-py4j round trips to build, not thousands. A custom comparator (a
-callable producing a Column, e.g. a pandas UDF) still gets the two
-payload Columns.
+(``functions/similarity.py``), so the 12-comparator Febrl feature
+array costs about 190 py4j round trips to build, not thousands. A
+custom comparator (a callable producing a Column, e.g. a pandas UDF)
+still gets the two payload Columns.
 """
 
 from __future__ import annotations
@@ -19,8 +19,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sparklyclean_spark.functions.similarity import COMPARATORS, SQL_COMPARATORS
-from sparklyclean_spark.functions.sqltext import ident
+from sparklyclean_spark.functions.similarity import COMPARATORS
 
 
 @dataclass(frozen=True)
@@ -38,22 +37,10 @@ class FieldComparator:
         a, b = (F.col(c) if isinstance(c, str) else c for c in (a, b))
         return self.comparator(a, b, **self.kwargs)
 
-    def sql(self, a: str, b: str) -> str | None:
-        """SQL text over the columns named ``a`` and ``b``, or None for
-        a Column-valued comparator (``jaro_winkler``, a callable)."""
-        if isinstance(self.comparator, str) and self.comparator in SQL_COMPARATORS:
-            return SQL_COMPARATORS[self.comparator](ident(a), ident(b), **self.kwargs)
-        return None
-
 
 def feature_columns(spec: list[FieldComparator], t1: str = "t1_", t2: str = "t2_") -> list[Column]:
     """One aliased feature Column per comparator: ``f_<col>``."""
-    out = []
-    for fc in spec:
-        a, b, name = f"{t1}{fc.col}", f"{t2}{fc.col}", f"f_{fc.col}"
-        text = fc.sql(a, b)
-        out.append(F.expr(f"{text} AS {ident(name)}") if text else fc.build(a, b).alias(name))
-    return out
+    return [fc.build(f"{t1}{fc.col}", f"{t2}{fc.col}").alias(f"f_{fc.col}") for fc in spec]
 
 
 def with_features(
@@ -63,16 +50,15 @@ def with_features(
 ) -> DataFrame:
     """Append features to a pairs DataFrame (``t1_*``/``t2_*`` payload
     columns). ``as_array=True`` adds ``features array<double>`` (the
-    reference's labeled-point layout, ``DisDedupReducer.scala:5``):
-    one ``F.expr`` when every comparator is SQL text, else an array of
-    Columns; otherwise one ``f_<col>`` column per comparator."""
+    reference's labeled-point layout, ``DisDedupReducer.scala:5``);
+    otherwise one ``f_<col>`` column per comparator."""
     if not as_array:
         return pairs.select("*", *feature_columns(spec))
-    texts = [fc.sql(f"t1_{fc.col}", f"t2_{fc.col}") for fc in spec]
-    if all(texts):
-        feats = ", ".join(f"cast({t} as double)" for t in texts)
-        return pairs.withColumn("features", F.expr(f"array({feats})"))
-    return pairs.withColumn("features", F.array(*[c.cast("double") for c in feature_columns(spec)]))
+    # An array element's alias is dropped, so the array takes the bare
+    # comparator Columns: each Column method (alias, cast) is ~10 py4j
+    # round trips of call-site capture.
+    feats = [fc.build(f"t1_{fc.col}", f"t2_{fc.col}").cast("double") for fc in spec]
+    return pairs.withColumn("features", F.array(*feats))
 
 
 def select_pair_features(

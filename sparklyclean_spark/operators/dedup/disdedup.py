@@ -192,8 +192,8 @@ def plan_assignment(
 
 
 def _fanout(blocked: DataFrame, keep: list[str], seed: int, k: int) -> DataFrame:
-    """``keep`` (SQL text) plus each (row, block)'s l triangle cells
-    with their role and reducer id, in ONE projection.
+    """``keep`` (quoted column names) plus each (row, block)'s l
+    triangle cells with their role and reducer id.
 
     ``l`` is the block's assigned side (``l_``; 1 for a tail block,
     which has no assignment row). For anchor ``a`` in [1, l], row i of
@@ -201,21 +201,26 @@ def _fanout(blocked: DataFrame, keep: list[str], seed: int, k: int) -> DataFrame
     S (i=a), R (i>a); the flat index of upper-triangle cell (p,q) is
     (p-1)(2l-p+2)/2 + (q-p) (reference ``DisDedupMapper.scala:32``).
     The reducer id is the planned one (``rids[cell]``) or, for a tail
-    block, a hash of (bk, bv).
+    block, a hash of (bk, bv). The row's hashes (``a`` and the tail
+    reducer id) are one projection under the generator, so each runs
+    once per row, not once per cell: Catalyst does not share common
+    subexpressions inside a lambda.
     """
-    l = "coalesce(l_, 1)"
-    a = f"(pmod(xxhash64(cast(id_ as string), bk, bv, {seed}), {l}) + 1)"
+    per_row = blocked.selectExpr(
+        *keep,
+        "rids",
+        "coalesce(l_, 1) AS _l",
+        f"pmod(xxhash64(cast(id_ as string), bk, bv, {seed}), coalesce(l_, 1)) + 1 AS _a",
+        f"cast(pmod(xxhash64(bk, bv, {seed}), {k}) + 1 as int) AS _t",
+    )
     cell = (
-        f"cast(((least(i, {a}) - 1) * (2 * {l} - least(i, {a}) + 2)) div 2"
-        f" + (greatest(i, {a}) - least(i, {a})) as int)"
+        "cast(((least(i, _a) - 1) * (2 * _l - least(i, _a) + 2)) div 2"
+        " + (greatest(i, _a) - least(i, _a)) as int)"
     )
-    rid = (
-        f"coalesce(element_at(rids, {cell} + 1),"
-        f" cast(pmod(xxhash64(bk, bv, {seed}), {k}) + 1 as int))"
-    )
-    role = f"CASE WHEN i < {a} THEN 'L' WHEN i = {a} THEN 'S' ELSE 'R' END"
-    cells = f"transform(sequence(1, {l}), i -> named_struct('cell', {cell}, 'role', {role}, 'rid', {rid}))"
-    return blocked.selectExpr(*keep, f"inline({cells})")
+    role = "CASE WHEN i < _a THEN 'L' WHEN i = _a THEN 'S' ELSE 'R' END"
+    rid = f"coalesce(element_at(rids, {cell} + 1), _t)"
+    cells = f"transform(sequence(1, _l), i -> named_struct('cell', {cell}, 'role', {role}, 'rid', {rid}))"
+    return per_row.selectExpr(*keep, f"inline({cells})")
 
 
 def candidate_pairs_disdedup(

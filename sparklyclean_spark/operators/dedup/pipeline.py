@@ -46,7 +46,8 @@ FEBRL_FEATURE_NAMES = [f"f_{fc.col}" for fc in FEBRL_SPEC]
 def febrl_label(id1: Column | str, id2: Column | str) -> Column:
     """Ground truth from Febrl ids: duplicate iff the <N> of
     ``rec-<N>-...`` matches (``Util.scala:26-43``). ``[1]`` is the
-    0-based second part."""
+    0-based second part. ``id1``/``id2`` are column names or ``F.col``
+    references (``sqltext.col_sql``)."""
     return F.expr(
         f"cast(split({col_sql(id1)}, '-')[1] = split({col_sql(id2)}, '-')[1] as double)"
     )

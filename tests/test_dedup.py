@@ -428,7 +428,7 @@ _COMPARATOR_VALUES = {
 def test_named_comparator_values(spark, col, name, mode):
     """Every named SQL-text comparator gives the pinned values, in both
     ladder modes; the Column functions take ``F.col`` references as
-    well as names, and refuse a computed Column."""
+    well as names, and refuse a computed or a DataFrame-bound Column."""
     from sparklyclean_spark.functions.similarity import COMPARATORS
     from sparklyclean_spark.operators.dedup.compare import (
         FieldComparator,
@@ -446,8 +446,10 @@ def test_named_comparator_values(spark, col, name, mode):
     fn = COMPARATORS[name]
     by_ref = pairs.select(fn(F.col(f"t1_{col}"), F.col(f"t2_{col}"), **kwargs))
     assert [r[0] for r in by_ref.collect()] == want  # createDataFrame keeps row order
-    with pytest.raises(TypeError, match="F.col"):
-        fn(F.upper(f"t1_{col}"), f"t2_{col}", **kwargs)
+    if name != "ignore":  # ignore reads neither argument
+        for bad in (F.upper(f"t1_{col}"), pairs[f"t1_{col}"]):  # computed, DataFrame-bound
+            with pytest.raises(TypeError, match="F.col"):
+                fn(bad, f"t2_{col}", **kwargs)
 
 
 # Per (k, mode): (lines, sha256 of the sorted lines) of program 1's
