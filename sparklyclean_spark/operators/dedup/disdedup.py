@@ -34,11 +34,12 @@ Spark-first:
   Catalyst's exchange + join is the idiomatic equivalent.
 * Exactly-once across overlapping blockings: lowest-common-block
   guard (G3), identical to the naive path.
-* Construction is SQL text: the fan-out (cells, roles, reducer ids)
-  is one projection, each join side one ``where`` plus one
-  ``selectExpr``, the residual and the guard one ``where`` string, the
-  id1 < id2 swap one ``selectExpr`` of ``CASE WHEN`` — a few dozen
-  py4j round trips instead of ~2,500 Column calls, same plan.
+* Construction is SQL text: the fan-out is a projection of the
+  per-row hashes plus one ``inline`` of the cells (roles, reducer
+  ids), each join side one ``where`` plus one ``selectExpr``, the
+  residual and the guard one ``where`` string, the id1 < id2 swap one
+  ``selectExpr`` of ``CASE WHEN`` — a few dozen py4j round trips
+  instead of ~2,500 Column calls, same pairs.
 
 Result set is provably identical to
 ``pairs.candidate_pairs_naive`` (differential-tested); the value is
