@@ -486,7 +486,7 @@ def test_program1_construction_budget(spark, people, tmp_path, monkeypatch):
     """Program 1 (read_febrl -> generate_labeled_points(k=49, sane) ->
     write_labeled_points), planning query and write included, makes at
     most 1,000 Python->JVM round trips. Built from Column calls it made
-    about 7,000; built from SQL text, about 550."""
+    about 7,000; built from SQL text, about 850."""
     from py4j.java_gateway import GatewayClient
 
     from sparklyclean_spark.operators.dedup.pipeline import generate_labeled_points
